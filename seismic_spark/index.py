@@ -97,6 +97,9 @@ class SeismicSparkIndex:
         # Only populated for tables whose DataFrame is a plain scan of the
         # files (never for a packed forward, which load() unpacks in-plan).
         self.storage_paths: dict[str, str] = {}
+        # broadcast ServingReplica of the last build_knn (knn.py replica
+        # map) — released by the next build_knn and by unpersist_serving
+        self._knn_bcast = None
 
     # ------------------------------------------------------------- build ----
 
@@ -457,15 +460,6 @@ class SeismicSparkIndex:
         qvecs = srch.resolve_queries(
             self.spark, queries, self.vocab, cache=self._csr_cache
         )
-        # driver-CSR scoring gate: interactive batches on a forward table
-        # that fits the driver budget run the fully-local fast path
-        # (search._driver_theta_local — result-identical, one Spark job);
-        # larger corpora keep the distributed formulations unchanged
-        est_fwd_bytes = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
-        local_score = (
-            os.environ.get("SEISMIC_LOCAL_SCORE", "1") == "1"
-            and 0 < est_fwd_bytes <= srch._LOCAL_SCORE_MAX_BYTES
-        )
         base = srch.batch_search(
             self.spark,
             self._postings_for(qvecs),
@@ -476,7 +470,7 @@ class SeismicSparkIndex:
             heap_factor=heap_factor,
             two_phase=two_phase,
             cache_registry=self._ubs_caches,
-            local_score=local_score,
+            local_score=self._local_score(),
             csr_cache=self._csr_cache,
         )
         if n_knn <= 0:
@@ -539,6 +533,14 @@ class SeismicSparkIndex:
     def unpersist_serving(self) -> None:
         for df in (self.forward, self.postings, self.vocab):
             df.unpersist()
+        self._release_knn_broadcast()
+
+    def _release_knn_broadcast(self) -> None:
+        """Drop the executor copies of the last build_knn's replica
+        broadcast (a graph recomputed later re-sends it from the driver)."""
+        if self._knn_bcast is not None:
+            self._knn_bcast.unpersist(blocking=False)
+            self._knn_bcast = None
 
     def _postings_for(self, qvecs) -> DataFrame:
         """Partition-pruned postings scan: for a bucket-partitioned snapshot
@@ -592,15 +594,19 @@ class SeismicSparkIndex:
         qvecs = srch.resolve_queries(
             self.spark, queries, self.vocab, cache=self._csr_cache
         )
-        est_fwd_bytes = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
-        local_score = (
-            os.environ.get("SEISMIC_LOCAL_SCORE", "1") == "1"
-            and 0 < est_fwd_bytes <= srch._LOCAL_SCORE_MAX_BYTES
-        )
         return srch.bruteforce_search(
             self.spark, self.forward, qvecs, k,
-            local_score=local_score, csr_cache=self._csr_cache,
+            local_score=self._local_score(), csr_cache=self._csr_cache,
         )
+
+    def _local_score(self) -> bool:
+        """Driver-CSR scoring gate: interactive batches on a forward table
+        that fits the driver budget (est. n_docs·avgdl·16 B vs
+        search._LOCAL_SCORE_MAX_BYTES) run the fully-local fast paths —
+        result-identical, one Spark job; larger corpora keep the
+        distributed formulations."""
+        est_fwd_bytes = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
+        return 0 < est_fwd_bytes <= srch._LOCAL_SCORE_MAX_BYTES
 
     # --------------------------------------------------------------- knn ----
 

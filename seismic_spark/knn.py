@@ -5,13 +5,23 @@ query_cut=10, heap_factor=0.7, drop self — inverted_index.rs:448-500) and
 ``Knn::refine`` re-scores each result's stored neighbors (551-593).
 
 Spark shape: construction is ONE batch self-search job — the forward index
-itself becomes the queries DataFrame (search.py takes queries as a DataFrame,
-so query vectors travel as Arrow array columns through the plan; nothing is
-ever collected to the driver).  This is the per-doc rayon loop of
-inverted_index.rs:448-500 re-expressed as a join.  The graph persists as a
-``knn(doc_id BIGINT, neighbors ARRAY<BIGINT>)`` table (S8); loading may
-truncate neighbor lists (`nknn` param) like ``new_from_serialized``
-(inverted_index.rs:502-540).
+itself becomes the queries DataFrame (query vectors travel as Arrow array
+columns through the plan).  This is the per-doc rayon loop of
+inverted_index.rs:448-500 re-expressed as a map:
+
+- replica map (default): an index whose true byte size (``space_usage``)
+  fits ``_KNN_BCAST_MAX_BYTES`` is hydrated once into a
+  :class:`~seismic_spark.serving.ServingReplica`, collected to the driver
+  and broadcast; one narrow map over the forward scan answers every query
+  with the kernel (seismic_spark/kernel.py).
+- in-plan fallback: above the budget (or with ``two_phase``) nothing is
+  collected — :func:`search.batch_search` runs its DataFrame formulation
+  (postings ⋈ queries, block-UB scan, fused θ tail, rescore join).
+
+Both give the same graph (tests/test_r6_optimizations.py).  The graph
+persists as a ``knn(doc_id BIGINT, neighbors ARRAY<BIGINT>)`` table (S8);
+loading may truncate neighbor lists (`nknn` param) like
+``new_from_serialized`` (inverted_index.rs:502-540).
 """
 
 from __future__ import annotations
@@ -21,66 +31,45 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from seismic_spark import kernel
 from seismic_spark import search as srch
 
-# Broadcast-CSR rescore gate for graph construction: the self-search tail
-# collects forward + query vectors (two bounded driver collects of
-# ≈ n_docs·avgdl·16 B each) and broadcasts them so candidate pairs are
-# scored WITHOUT a pair×vector join — the pair rows (the corpus × ~corpus
-# candidate set) never carry vectors through an exchange or the Arrow
-# boundary (guide §8).  Above the cap the un-collected join path runs
-# unchanged, so the gate is scale-safe: est. bytes = 2 sides × n·avgdl·16.
-# avgdl counts TOKENS, so the estimate overshoots true CSR bytes ~5–10×
-# for tokenized corpora; at the 1 GB default the worst-case per-worker
-# residency (pre-weighted vectors, avgdl == nnz) is ~1 GB across both
-# broadcast sides — ~32 GB over 32 local workers, within the 128 GB box,
-# and far less in the tokenized common case.
+# Replica-map budget for graph construction: the replica is ≈ the index's
+# own bytes (space_usage — the same true count ServingReplica.from_index
+# checks), held on the driver and once per executor.  At the 1 GB default
+# that is ~32 GB over 32 local workers, within a 128 GB box.  Above it the
+# un-collected in-plan path runs, so the gate is scale-safe.
 _KNN_BCAST_MAX_BYTES = int(
     os.environ.get("SEISMIC_KNN_BCAST_MAX_BYTES", str(1 << 30))
 )
 
 
-def build_knn(index, nknn: int = 10, batch_size: int | None = None,
-              query_cut: int = 10, heap_factor: float = 0.7,
-              two_phase: bool = False) -> DataFrame:
+def build_knn(index, nknn: int = 10, query_cut: int = 10,
+              heap_factor: float = 0.7, two_phase: bool = False) -> DataFrame:
     """(doc_id, neighbors ARRAY<BIGINT>) — top-nknn neighbors per doc.
 
     Reference parity: self-queries with the doc's own vector, drops the doc
     itself, keeps nknn (inverted_index.rs:448-500; defaults 468-472).
-
-    One distributed job: forward-as-queries ⋈ postings on term_id → block
-    pruning → exact re-score ⋈ forward — no ``collect()``, no per-batch job
-    loop, so it runs at corpus scale.  ``batch_size`` is accepted for
-    backward compatibility and ignored (the old driver-batched path is gone).
+    No per-batch driver loop; the replica map or the in-plan fallback (see
+    the module docstring) answers every query in one job.
     """
-    spark = index.spark
     queries_df = index.forward.select(
         F.col("doc_id").cast("string").alias("query_id"),
         F.col("terms").alias("q_terms"),
         F.col("weights").alias("q_weights"),
     ).filter(F.size("q_terms") > 0)
-    est_vec_bytes = 2 * int(index.n_docs * max(float(index.avgdl), 1.0) * 16)
-    gated = not two_phase and 0 < est_vec_bytes <= _KNN_BCAST_MAX_BYTES
-    if gated and os.environ.get("SEISMIC_KNN_REPLICA", "1") == "1":
-        # map-only self-search (r6 pass 3): broadcast a ServingReplica —
-        # bit-identical to batch_search by test_serving's pinning — and
-        # run every query against it inside ONE map stage over the forward
-        # scan: no block-UB scan, no gap-blob exchange, no per-pair rows
-        # anywhere (guide §8 taken to its end for size-gated corpora).
-        # Above the gate (or SEISMIC_KNN_REPLICA=0) the prior paths run
-        # unchanged.
+    # the previous graph's replica broadcast is released here (a lazy graph
+    # recomputed later re-sends it from the driver)
+    index._release_knn_broadcast()
+    if not two_phase and index.space_usage()["total"] <= _KNN_BCAST_MAX_BYTES:
         res = _replica_self_search(
             index, queries_df, nknn + 1, query_cut, heap_factor
         )
     else:
-        rescore_bcast = (
-            gated and os.environ.get("SEISMIC_KNN_BCAST", "1") == "1"
-        )
         res = srch.batch_search(
-            spark, index.postings, index.forward, queries_df,
+            index.spark, index.postings, index.forward, queries_df,
             k=nknn + 1, query_cut=query_cut, heap_factor=heap_factor,
             two_phase=two_phase, broadcast_queries=False,
-            rescore_bcast=rescore_bcast,
         )
     # group on the STRING query_id so the aggregation reuses the top-k
     # window's hash(query_id) partitioning (no extra Exchange — guide §2.4);
@@ -109,64 +98,37 @@ def _replica_self_search(
     """Score every query row against a broadcast :class:`ServingReplica` in
     one map stage — (query_id, rank, doc_id, score), bitwise-identical to
     `search.batch_search` on the same index/params (the replica IS the
-    pinned bit-identical twin of batch_search, tests/test_serving.py;
-    `test_build_knn_replica_matches_join` pins this path against both prior
-    formulations on real data).
+    pinned bit-identical twin of batch_search, tests/test_serving.py).
 
-    Per-row duplicate/merge semantics match the engine's `_repair_qkey`
-    batch-side repair: forward rows are duplicate-free and term-sorted by
-    construction, and `merge_sorted_terms` is the identity on such rows —
-    the merge only exists as belt-and-braces for non-forward callers.
+    Per-row duplicate/merge semantics match the engine's batch-side
+    repair: forward rows are duplicate-free and term-sorted by
+    construction, and `merge_sorted_terms` is the identity on such rows.
 
     Cost model (why this wins): the replica's postings+forward arrays are
     ≈ the index's own bytes, shipped ONCE per executor via broadcast (the
-    `__getstate__` flat-state pickle), while the prior path shipped every
-    (query, term) pair's gap blob through an exchange and re-decoded it
+    `__getstate__` flat-state pickle), while the in-plan path ships every
+    (query, term) pair's gap blob through an exchange and re-decodes it
     per task.  One narrow map over the forward scan is the entire search.
+    The broadcast handle is kept on the index (``_knn_bcast``) and released
+    by the next build_knn or ``unpersist_serving``.
     """
-    rep = index.serving_replica()
-    bc = index.spark.sparkContext.broadcast(rep)
+    from seismic_spark.serving import ServingReplica
+
+    rep = ServingReplica.from_index(index, max_bytes=_KNN_BCAST_MAX_BYTES)
+    bc = index._knn_bcast = index.spark.sparkContext.broadcast(rep)
 
     def gen(it):
-        import numpy as np
-        import pandas as pd
-
         r = bc.value
         for pdf in it:
-            if pdf.empty:
-                continue
-            out_qid: list[str] = []
-            out_rank: list[np.ndarray] = []
-            out_doc: list[np.ndarray] = []
-            out_score: list[np.ndarray] = []
-            qids = pdf["query_id"].to_numpy()
-            t_col = pdf["q_terms"].to_numpy()
-            w_col = pdf["q_weights"].to_numpy()
-            for i in range(len(pdf)):
-                t = np.asarray(t_col[i], dtype=np.int64)
-                if t.size == 0:
-                    continue
-                w = np.asarray(w_col[i], dtype=np.float64)
-                qt, qw = srch.merge_sorted_terms(t, w)
-                hit = r._search_resolved(
-                    qt, qw, k, query_cut, heap_factor, False
-                )
-                if hit is None:
-                    continue
-                pos, sc = hit
-                out_qid.extend([qids[i]] * pos.size)
-                out_rank.append(np.arange(1, pos.size + 1, dtype=np.int32))
-                out_doc.append(r.doc_ids[pos])
-                out_score.append(sc)
-            if out_qid:
-                yield pd.DataFrame(
-                    {
-                        "query_id": out_qid,
-                        "rank": np.concatenate(out_rank),
-                        "doc_id": np.concatenate(out_doc),
-                        "score": np.concatenate(out_score),
-                    }
-                )
+            cols = (pdf["query_id"], pdf["q_terms"], pdf["q_weights"])
+            rows = (
+                (qid, *kernel.merge_sorted_terms(t, w))
+                for qid, t, w in zip(*cols)
+                if len(t)
+            )
+            out = r._search_many(rows, k, query_cut, heap_factor, False)
+            if len(out):
+                yield out
 
     return queries_df.mapInPandas(
         gen, "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"

@@ -7,7 +7,7 @@ glibc mmap()s and munmap()s on free (default threshold: dynamic, ≤32 MB) or
 that jemalloc's decay returns to the OS is re-faulted from zero on the next
 iteration.  Event-log measured on this engine: an identical fused-rescore
 stage ran 121 s vs 2.3 s across two windows purely on "time to run Python
-workers" (page stalls), and the slicing fix in `search._score_pairs_csr`
+workers" (page stalls), and the slicing fix in `kernel.score_pairs`
 recovered it by keeping temporaries under the mmap threshold.
 
 This module applies the same principle to the WHOLE process, so every

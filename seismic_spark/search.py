@@ -47,6 +47,9 @@ exact score is a `codec.segment_sums` (np.add.reduceat) over identically
 ordered f64 contribution arrays, which is a position-independent pure
 function of the segment — engine and oracle floats are bitwise equal, so
 knife-edge skip decisions (ub vs hf·θ) can never diverge between them.
+The numpy half of every path here (Arrow scans, the fused tail, the
+driver-local fast path, bruteforce) runs on seismic_spark/kernel.py, the
+same code the serving replica and the κ-NN map run.
 """
 
 from __future__ import annotations
@@ -59,17 +62,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from seismic_spark import codec
-
-QVec = tuple[np.ndarray, np.ndarray]  # (term_ids sorted asc int64, weights f64)
+from seismic_spark import codec, kernel
+from seismic_spark.kernel import QVec, merge_sorted_terms
 
 QUERIES_SCHEMA = "query_id STRING, q_terms ARRAY<INT>, q_weights ARRAY<DOUBLE>"
 
-_KEY_SHIFT = np.int64(1) << np.int64(32)  # (row, term) → sortable combined key
-# dense query-weight LUT gate for _score_pairs_csr (one f64 slot per term id,
-# 32 MB at the 4M default — the serving replica's §13b gate, same rationale);
-# larger id spaces fall back to the value-identical searchsorted gather
-_SCORE_LUT_MAX_DIM = 1 << 22
 # driver-side vocab map gate for resolve_queries (strings + ids; ~60 MB at
 # the 1M default) — over it, token resolution stays a per-batch join
 _VOCAB_MAP_MAX_TERMS = int(os.environ.get("SEISMIC_VOCAB_MAP_MAX_TERMS", str(1 << 20)))
@@ -96,7 +93,7 @@ def resolve_queries(
     construction: ``term`` is unique in vocab, the join keeps exactly the
     tokens the dict lookup keeps, and both paths merge duplicates through
     the same pinned :func:`merge_sorted_terms` (order-independent).  Over
-    the cap (or ``SEISMIC_LOCAL_RESOLVE=0``) the join path runs unchanged.
+    the cap the join path runs unchanged.
     """
     rows = [
         (qid, t, float(w))
@@ -107,7 +104,7 @@ def resolve_queries(
         return {}
     by_q: dict[str, list[tuple[int, float]]] = {}
     vmap = None
-    if cache is not None and os.environ.get("SEISMIC_LOCAL_RESOLVE", "1") == "1":
+    if cache is not None:
         vmap = cache.get("vocab_map")
         if vmap is None and not cache.get("vocab_map_overflow"):
             capped = (
@@ -187,43 +184,21 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
 
     def gen(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for rb in it:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            qt = rb.column(rb.schema.get_field_index("q_terms"))
-            qw = rb.column(rb.schema.get_field_index("q_weights"))
-            lens = pc.list_value_length(qt).to_numpy().astype(np.int64)
-            t_flat = qt.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            w_flat = qw.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-            key = row_rep * _KEY_SHIFT + t_flat
-            # merge duplicate (row, term): (term asc, weight asc) reduceat —
-            # THE pinned merge order (see merge_sorted_terms)
-            order = np.lexsort((w_flat, key))
-            k_s, w_s = key[order], w_flat[order]
-            if k_s.size > 1 and np.any(np.diff(k_s) == 0):
-                starts = np.flatnonzero(
-                    np.concatenate(([True], np.diff(k_s) != 0))
-                )
-                w_s = np.add.reduceat(w_s, starts)
-                k_s = k_s[starts]
-            row_m = k_s // _KEY_SHIFT
-            t_m = k_s - row_m * _KEY_SHIFT
+            t_flat, lens = kernel.list_flat(rb.column("q_terms"), np.int64)
+            w_flat, _ = kernel.list_flat(rb.column("q_weights"), np.float64)
+            row_rep = np.repeat(np.arange(rb.num_rows, dtype=np.int64), lens)
+            # merge duplicate (row, term) through THE pinned merge order
+            k_s, w_s = merge_sorted_terms(row_rep * kernel.KEY_SHIFT + t_flat, w_flat)
+            row_m = k_s // kernel.KEY_SHIFT
+            t_m = k_s - row_m * kernel.KEY_SHIFT
             # top-query_cut per row by (weight desc, term asc)
             sel = np.lexsort((t_m, -w_s, row_m))
-            rr = row_m[sel]
-            rstarts = np.flatnonzero(
-                np.concatenate(([True], rr[1:] != rr[:-1]))
-            )
-            seg_lens = np.diff(np.concatenate((rstarts, [rr.size])))
-            rank = np.arange(rr.size, dtype=np.int64) - np.repeat(
-                rstarts, seg_lens
-            )
-            keep = sel[rank < query_cut]
-            idx = pa.array(row_m[keep])
+            keep = sel[kernel.group_rank(kernel.segment_starts(row_m[sel])) < query_cut]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pc.take(rb.column(rb.schema.get_field_index("query_id")), idx),
+                    pc.take(rb.column("query_id"), pa.array(row_m[keep])),
                     pa.array(t_m[keep].astype(np.int32)),
                     pa.array(w_s[keep]),
                 ],
@@ -233,85 +208,6 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
     return queries_df.select("query_id", "q_terms", "q_weights").mapInArrow(
         gen, "query_id STRING, term_id INT, qw DOUBLE"
     )
-
-
-# ------------------------------------------------- flattened batch utils ----
-
-
-def _concat(arrays: list[np.ndarray], dtype) -> np.ndarray:
-    return np.concatenate(arrays) if arrays else np.empty(0, dtype=dtype)
-
-
-def _query_keys(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Flatten per-row query arrays → (qkey sorted asc, qw_all, qlens).
-
-    qkey = row_index·2^32 + term_id; rows ascend and q_terms are sorted
-    ascending within a row, so the concatenation is globally sorted — one
-    np.searchsorted serves every row of the batch at once.
-
-    A user-supplied queries DataFrame (QUERIES_SCHEMA) with UNSORTED q_terms
-    is repaired here (in-row sort, weights permuted identically); duplicate
-    term ids within one row are MERGED by summing their weights — for a dot
-    product `q·d` a repeated component contributes `(w1+w2)·dv`, so the merge
-    is score-identical to the caller's intent and never aborts the batch.
-    """
-    qt_list = [np.asarray(a, dtype=np.int64) for a in pdf["q_terms"]]
-    qlens = np.fromiter((a.size for a in qt_list), dtype=np.int64, count=len(qt_list))
-    qt_all = _concat(qt_list, np.int64)
-    qw_all = _concat(
-        [np.asarray(a, dtype=np.float64) for a in pdf["q_weights"]], np.float64
-    )
-    row_rep = np.repeat(np.arange(len(pdf), dtype=np.int64), qlens)
-    qkey = row_rep * _KEY_SHIFT + qt_all
-    qkey, qw_all = _repair_qkey(qkey, qw_all)
-    return qkey, qw_all, qlens
-
-
-def _repair_qkey(
-    qkey: np.ndarray, qw_all: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Shared tail of :func:`_query_keys`: in-place-order repair of an
-    unsorted flattened query-key array + duplicate merge (stable argsort,
-    reduceat in original-order-within-group) — extracted so the Arrow-flat
-    scoring path reuses the exact same float behavior."""
-    if qkey.size > 1:
-        d = np.diff(qkey)
-        if not np.all(d > 0):
-            order = np.argsort(qkey, kind="stable")
-            qkey, qw_all = qkey[order], qw_all[order]
-            dup = np.diff(qkey) == 0
-            if np.any(dup):
-                starts = np.flatnonzero(
-                    np.concatenate(([True], ~dup))
-                )
-                qw_all = np.add.reduceat(qw_all, starts)
-                qkey = qkey[starts]
-    return qkey, qw_all
-
-
-def _binary_flat(a) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (flat uint8 data in element order, per-element byte length)
-    view of a pyarrow Binary array — a binary column is one contiguous data
-    buffer plus offsets (guide §4.2), so re-slicing replaces a per-cell
-    ``np.frombuffer`` + concatenate."""
-    n = len(a)
-    bufs = a.buffers()
-    if n == 0 or bufs[1] is None or bufs[2] is None:
-        return np.empty(0, dtype=np.uint8), np.zeros(n, dtype=np.int64)
-    off = np.frombuffer(bufs[1], dtype=np.int32)[a.offset : a.offset + n + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
-    return data, np.diff(off).astype(np.int64)
-
-
-def _gather_qw(
-    qkey: np.ndarray, qw_all: np.ndarray, row_of: np.ndarray, terms: np.ndarray
-) -> np.ndarray:
-    """Per-element query weight (0.0 when the term isn't in that row's query)."""
-    skey = row_of * _KEY_SHIFT + terms
-    idx = np.searchsorted(qkey, skey)
-    idx_c = np.minimum(idx, max(qkey.size - 1, 0))
-    hit = qkey[idx_c] == skey if qkey.size else np.zeros(skey.size, dtype=bool)
-    return np.where(hit, qw_all[idx_c] if qw_all.size else 0.0, 0.0)
 
 
 # -------------------------------------------------------------- scoring -----
@@ -356,26 +252,18 @@ def exact_score(
             n = rb.num_rows
             if n == 0:
                 continue
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            qlens = pc.list_value_length(cols["q_terms"]).to_numpy().astype(np.int64)
-            qt_all = cols["q_terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            qw_all = cols["q_weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            qrow = np.repeat(np.arange(n, dtype=np.int64), qlens)
-            qkey = qrow * _KEY_SHIFT + qt_all
-            qkey, qw_all = _repair_qkey(qkey, qw_all)
-
-            lens = pc.list_value_length(cols["terms"]).to_numpy().astype(np.int64)
-            t_all = cols["terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            w_all = cols["weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+            qkey, qw = kernel.arrow_query_keys(
+                rb.column("q_terms"), rb.column("q_weights")
+            )
+            t_all, lens = kernel.list_flat(rb.column("terms"), np.int64)
+            w_all, _ = kernel.list_flat(rb.column("weights"), np.float64)
             row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-            qw_elem = _gather_qw(qkey, qw_all, row_rep, t_all)
-            contrib = qw_elem * w_all
-            starts = np.cumsum(lens) - lens
-            scores = codec.segment_sums(contrib, starts, lens)
+            contrib = kernel.gather_qw(qkey, qw, t_all, row_rep) * w_all
+            scores = codec.segment_sums(contrib, np.cumsum(lens) - lens, lens)
             yield pa.RecordBatch.from_arrays(
                 [
-                    cols["query_id"],
-                    pc.cast(cols[id_col], pa.int64()),
+                    rb.column("query_id"),
+                    pc.cast(rb.column(id_col), pa.int64()),
                     pa.array(scores),
                 ],
                 ["query_id", "doc_id", "score"],
@@ -402,312 +290,103 @@ def topk(scored: DataFrame, k: int) -> DataFrame:
 # ------------------------------------------------------ block UB scan -------
 
 
-def _block_ubs(postings_matched: DataFrame, with_gaps: bool = True) -> DataFrame:
+def _block_ubs(postings_matched: DataFrame) -> DataFrame:
     """Per (query, posting-row, block): summary upper-bound dot (Q2), the
-    block-max lower bound, and (``with_gaps``) the block's encoded doc ids.
+    block-max lower bound, and the block's encoded doc ids.
 
     Fully vectorized per Arrow batch: all blocks of all rows are flattened
     into concatenated summary-element arrays; one searchsorted resolves every
     (element, query) weight; per-block UBs are segment sums.  No per-row or
     per-block Python math.
-
-    ``with_gaps=False`` drops the ``doc_gaps`` column from the scan entirely
-    (Parquet column pruning — the gap blobs are never read, decoded, or
-    shipped through Arrow); the deferred-gaps fast path re-fetches gaps for
-    SURVIVING blocks only via :func:`_fetch_gaps`.
     """
-    out_schema = (
-        "query_id STRING, term_id INT, salt INT, block INT, ub DOUBLE, "
-        "lb DOUBLE" + (", gaps BINARY" if with_gaps else "")
-    )
     import pyarrow as pa
     import pyarrow.compute as pc
 
     def scan(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        # r6: Arrow-native flat buffers (guide §4.2) — the old pandas path
-        # paid a per-CELL np.asarray over doubly-nested summary columns
-        # (summary lists per block per row); flatten()/list_value_length are
-        # O(1) buffer views and the gap blobs pass through as one untouched
-        # Arrow binary column.  All float math is unchanged dtype-for-dtype,
-        # so every ub/lb is bitwise identical to the pandas formulation.
+        # r6: Arrow-native flat buffers (guide §4.2) — flatten() /
+        # list_value_length are O(1) buffer views and the gap blobs pass
+        # through as one untouched Arrow binary column.
         for rb in it:
             nrow = rb.num_rows
             if nrow == 0:
                 continue
-            cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            qlens = pc.list_value_length(cols["q_terms"]).to_numpy().astype(np.int64)
-            qt_all = cols["q_terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            qw_all = cols["q_weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            qrow = np.repeat(np.arange(nrow, dtype=np.int64), qlens)
-            qkey, qw_all = _repair_qkey(qrow * _KEY_SHIFT + qt_all, qw_all)
-
-            # ---- block level -------------------------------------------
-            nb = pc.list_value_length(cols["blocks"]).to_numpy().astype(np.int64)
-            row_of_block = np.repeat(np.arange(nrow, dtype=np.int64), nb)
-            blocks_flat = cols["blocks"].flatten()
-            bmax_all = (
-                cols["block_max"].flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
+            qkey, qw_all = kernel.arrow_query_keys(
+                rb.column("q_terms"), rb.column("q_weights")
             )
-            qw_row = cols["qw"].to_numpy(zero_copy_only=False)
+            # ---- block level -------------------------------------------
+            blocks_flat, nb = kernel.list_flat(rb.column("blocks"))
+            row_of_block = np.repeat(np.arange(nrow, dtype=np.int64), nb)
+            bmax_all, _ = kernel.list_flat(rb.column("block_max"), np.float64)
+            qw_row = rb.column("qw").to_numpy(zero_copy_only=False)
             lb = qw_row[row_of_block] * bmax_all
 
             # ---- summary-element level ----------------------------------
-            st_inner = cols["summary_terms"].flatten()  # list<int> per block
-            slen = pc.list_value_length(st_inner).to_numpy().astype(np.int64)
-            st_all = st_inner.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            codes_bin = cols["summary_codes"].flatten()  # binary per block
-            codes_all, _ = _binary_flat(codes_bin)
-            mins_all = (
-                cols["summary_min"].flatten().to_numpy(zero_copy_only=False)
-            )  # float32, same values the pandas path saw
-            quants_all = (
-                cols["summary_quant"].flatten().to_numpy(zero_copy_only=False)
+            st_inner, _ = kernel.list_flat(rb.column("summary_terms"))
+            st_all, slen = kernel.list_flat(st_inner, np.int64)
+            codes_all, _ = kernel.binary_flat(
+                kernel.list_flat(rb.column("summary_codes"))[0]
             )
-            # dequantize (identical f32 arithmetic to codec.dequantize_u8)
-            vals = (
-                np.repeat(mins_all, slen)
-                + codes_all.astype(np.float32) * np.repeat(quants_all, slen)
-            ).astype(np.float32)
-            row_of_elem = np.repeat(row_of_block, slen)
-            qw_elem = _gather_qw(qkey, qw_all, row_of_elem, st_all)
-            contrib = qw_elem * vals.astype(np.float64)
-            elem_starts = np.cumsum(slen) - slen
-            ub = codec.segment_sums(contrib, elem_starts, slen)
+            vals = kernel.dequantize(
+                codes_all,
+                kernel.list_flat(rb.column("summary_min"), np.float32)[0],
+                kernel.list_flat(rb.column("summary_quant"), np.float32)[0],
+                slen,
+            )
+            qw_elem = kernel.gather_qw(
+                qkey, qw_all, st_all, np.repeat(row_of_block, slen)
+            )
+            ub = codec.segment_sums(qw_elem * vals, np.cumsum(slen) - slen, slen)
 
             idx = pa.array(row_of_block)
-            arrays = [
-                pc.take(cols["query_id"], idx),
-                pc.take(cols["term_id"], idx),
-                pc.take(cols["salt"], idx),
-                blocks_flat,
-                pa.array(ub),
-                pa.array(lb),
-            ]
-            names = ["query_id", "term_id", "salt", "block", "ub", "lb"]
-            if with_gaps:
-                arrays.append(cols["doc_gaps"].flatten())
-                names.append("gaps")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pc.take(rb.column("query_id"), idx),
+                    pc.take(rb.column("term_id"), idx),
+                    pc.take(rb.column("salt"), idx),
+                    blocks_flat,
+                    pa.array(ub),
+                    pa.array(lb),
+                    kernel.list_flat(rb.column("doc_gaps"))[0],
+                ],
+                ["query_id", "term_id", "salt", "block", "ub", "lb", "gaps"],
+            )
 
     cols_df = postings_matched.select(
         "query_id", "term_id", "salt", "qw", "q_terms", "q_weights",
-        "blocks", "block_max",
-        *(("doc_gaps",) if with_gaps else ()),
+        "blocks", "block_max", "doc_gaps",
         "summary_terms", "summary_codes", "summary_min", "summary_quant",
     )
-    return cols_df.mapInArrow(scan, out_schema)
+    return cols_df.mapInArrow(
+        scan,
+        "query_id STRING, term_id INT, salt INT, block INT, ub DOUBLE, "
+        "lb DOUBLE, gaps BINARY",
+    )
 
 
-def _vectors_csr(
-    df: DataFrame, id_col: str, t_col: str, w_col: str, with_qkey: bool = False
-):
-    """Collect an (id, terms, weights) DataFrame into flat CSR numpy arrays
-    for executor-side broadcast (guide §3.1 / §8: ship the small vector table
-    once per executor instead of once per candidate pair).
+def _forward_csr(forward: DataFrame, csr_cache: dict | None):
+    """The forward table as flat CSR numpy arrays on the driver, collected
+    once per index (``csr_cache`` is the caller's per-instance dict).
 
-    Returns ``(ids_sorted, perm, starts, lens, t_flat, w_flat)`` — ids sorted
-    for searchsorted lookup, ``perm`` mapping sorted position → original row,
-    and per-original-row (start, len) slices into the flat term/weight
-    arrays.  ``with_qkey=True`` additionally returns the prebuilt
-    ``(qkey, qw)`` pair for :func:`_gather_qw` — the same
-    row·2^32+term combined-key construction (and the same
-    :func:`_repair_qkey` duplicate merge) the join-path scorer applies per
-    Arrow batch, so gathered weights are bitwise identical.
+    Returns ``(ids_sorted, perm, starts, lens, t_flat, w_flat)`` — doc ids
+    sorted for searchsorted lookup, ``perm`` mapping sorted position → row,
+    and per-row (start, len) slices into the flat term/weight arrays.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    tbl = df.select(id_col, t_col, w_col).toArrow().combine_chunks()
-    n = tbl.num_rows
-    ids_col = tbl.column(0)
-    ids_col = ids_col.chunk(0) if ids_col.num_chunks else pa.array([], ids_col.type)
-    if pa.types.is_string(ids_col.type) or pa.types.is_large_string(ids_col.type):
-        ids = np.asarray(ids_col.to_pylist(), dtype=np.str_)
-    else:
-        ids = ids_col.to_numpy(zero_copy_only=False).astype(np.int64)
-    t_a = tbl.column(1)
-    t_a = t_a.chunk(0) if t_a.num_chunks else pa.array([], t_a.type)
-    w_a = tbl.column(2)
-    w_a = w_a.chunk(0) if w_a.num_chunks else pa.array([], w_a.type)
-    lens = pc.list_value_length(t_a).to_numpy(zero_copy_only=False).astype(np.int64)
-    starts = np.cumsum(lens) - lens
-    t_flat = t_a.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-    w_flat = w_a.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    perm = np.argsort(ids, kind="stable")
-    out = (ids[perm], perm.astype(np.int64), starts, lens, t_flat, w_flat)
-    if not with_qkey:
-        return out
-    row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-    qkey, qw = _repair_qkey(row_rep * _KEY_SHIFT + t_flat, w_flat)
-    return out + (qkey, qw)
+    fwd_csr = csr_cache.get("forward") if csr_cache is not None else None
+    if fwd_csr is None:
+        tbl = forward.select("doc_id", "terms", "weights").toArrow()
+        ids = tbl.column(0).to_numpy().astype(np.int64)
+        t_flat, lens = kernel.list_flat(tbl.column(1), np.int64)
+        w_flat, _ = kernel.list_flat(tbl.column(2), np.float64)
+        perm = np.argsort(ids, kind="stable")
+        fwd_csr = (ids[perm], perm, np.cumsum(lens) - lens, lens, t_flat, w_flat)
+        if csr_cache is not None:
+            csr_cache["forward"] = fwd_csr
+    return fwd_csr
 
 
-def _score_pairs_csr(
-    qi_pair: np.ndarray,
-    di_v: np.ndarray,
-    f_starts: np.ndarray,
-    f_lens: np.ndarray,
-    f_t: np.ndarray,
-    f_w: np.ndarray,
-    q_key: np.ndarray,
-    q_w: np.ndarray,
-    threads: int = 1,
-) -> np.ndarray:
-    """Exact scores for (query-index, doc-position) pairs against CSR
-    vectors — the same flat f64 contribution arrays, in doc-element order,
-    as :func:`exact_score`'s Arrow batches, so every score is bitwise
-    identical.
-
-    Scored in bounded element slices: one unsliced pass allocates
-    element-length temporaries of tens-to-hundreds of MB, which glibc mmaps
-    and returns to the OS on free — every call then faults fresh pages, and
-    under a throttled host page supply the pass stalls for minutes
-    (event-log measured: 121 s vs 2.3 s python time for identical input).
-    ≤ ~12 MB temporaries stay under the allocator's dynamic mmap threshold
-    and are recycled in-heap.  Per-pair contribution arrays and their
-    segment_sums are unchanged by the slicing.
-
-    ``threads > 1`` scores the (independent, disjoint-output) slices on a
-    thread pool — the hot numpy ops release the GIL, measured ~4× at 8
-    threads.  Per-slice computation is untouched, so scores stay bitwise
-    identical at any thread count.  DRIVER callers use it; executor-side
-    callers keep 1 (their parallelism is the task grid).
-
-    Query-weight gather (r6 pass 3): the per-element ``_gather_qw``
-    binary search (log|q_key| comparisons PER ELEMENT) was this pass's
-    dominant cost — microbenched ~18× slower than a fancy-index gather at
-    the knn design point, and the fused-rescore stage's task-seconds were
-    ≈ the searchsorted cost alone.  The pair stream arrives in per-query
-    runs, so the serving replica's dense-LUT trick (§13b) applies: scatter
-    the current run's repaired weights into a per-thread dense table,
-    gather by term id, zero the run's slots.  Value-identical by
-    construction — stored (duplicate-merged) weight at hits, 0.0 at misses,
-    the same floats `_gather_qw` returns — so every score is bitwise
-    unchanged (pinned by test_r6_optimizations).  Falls back to the
-    searchsorted gather when the term-id space exceeds ``_SCORE_LUT_MAX_DIM``
-    (dense table > 32 MB) or ``SEISMIC_SCORE_LUT=0``.
-    """
-    lens = f_lens[di_v]
-    ends = np.cumsum(lens)
-    scores = np.empty(qi_pair.size, dtype=np.float64)
-    cap = 1_500_000
-    npair = qi_pair.size
-    bounds: list[tuple[int, int]] = []
-    lo = 0
-    while lo < npair:
-        base = int(ends[lo - 1]) if lo else 0
-        hi = int(np.searchsorted(ends, base + cap, side="right"))
-        hi = min(max(hi, lo + 1), npair)
-        bounds.append((lo, hi))
-        lo = hi
-
-    lut_dim = 0
-    if q_key.size and os.environ.get("SEISMIC_SCORE_LUT", "1") == "1":
-        # all gathered term ids are < _KEY_SHIFT by construction; dim covers
-        # both the forward element ids and the query term ids
-        dim = 1 + max(
-            int(f_t.max()) if f_t.size else 0,
-            int((q_key % _KEY_SHIFT).max()),
-        )
-        if dim <= _SCORE_LUT_MAX_DIM:
-            lut_dim = dim
-    _luts: dict[int, np.ndarray] = {}
-
-    def _slice(b: tuple[int, int]) -> None:
-        lo, hi = b
-        sl = slice(lo, hi)
-        l_sl = lens[sl]
-        pstarts = np.cumsum(l_sl) - l_sl
-        tot = int(pstarts[-1] + l_sl[-1]) if l_sl.size else 0
-        idx = np.repeat(f_starts[di_v[sl]] - pstarts, l_sl) + np.arange(
-            tot, dtype=np.int64
-        )
-        if lut_dim:
-            import threading
-
-            tid = threading.get_ident()
-            lut = _luts.get(tid)
-            if lut is None:
-                lut = np.zeros(lut_dim, dtype=np.float64)
-                _luts[tid] = lut
-            terms_el = f_t[idx]
-            qi_sl = qi_pair[sl]
-            qw_elem = np.empty(tot, dtype=np.float64)
-            run_s = np.flatnonzero(
-                np.concatenate(([True], qi_sl[1:] != qi_sl[:-1]))
-            )
-            run_e = np.concatenate((run_s[1:], [qi_sl.size]))
-            el_of = np.concatenate((pstarts, [tot]))
-            for rs, re_ in zip(run_s, run_e):
-                q = int(qi_sl[rs])
-                a = int(np.searchsorted(q_key, q * _KEY_SHIFT, side="left"))
-                bq = int(
-                    np.searchsorted(q_key, (q + 1) * _KEY_SHIFT, side="left")
-                )
-                es, ee = int(el_of[rs]), int(el_of[re_])
-                if a == bq:  # query absent from q_key → all misses (0.0)
-                    qw_elem[es:ee] = 0.0
-                    continue
-                qt_r = (q_key[a:bq] % _KEY_SHIFT).astype(np.int64)
-                lut[qt_r] = q_w[a:bq]
-                qw_elem[es:ee] = lut[terms_el[es:ee]]
-                lut[qt_r] = 0.0
-            scores[sl] = codec.segment_sums(qw_elem * f_w[idx], pstarts, l_sl)
-            return
-        qw_elem = _gather_qw(
-            q_key, q_w, np.repeat(qi_pair[sl], l_sl), f_t[idx]
-        )
-        scores[sl] = codec.segment_sums(qw_elem * f_w[idx], pstarts, l_sl)
-
-    if threads > 1 and len(bounds) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=threads) as ex:
-            list(ex.map(_slice, bounds))
-    else:
-        for b in bounds:
-            _slice(b)
-    return scores
-
-
-def _topk_select(
-    qi: np.ndarray, ds: np.ndarray, scores: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-query top-k selection over scored pairs by the pinned
-    (score desc, doc_id asc) total order :func:`topk`'s row_number uses.
-    Returns (selected pair indices, int32 ranks 1..k) — negating finite f64
-    scores is order-exact, so the selection equals the window's."""
-    order = np.lexsort((ds, -scores, qi))
-    qo = qi[order]
-    ostarts = np.flatnonzero(np.concatenate(([True], qo[1:] != qo[:-1])))
-    olens = np.diff(np.concatenate((ostarts, [qo.size])))
-    rank = np.arange(qo.size, dtype=np.int64) - np.repeat(ostarts, olens)
-    keepk = rank < k
-    return order[keepk], (rank[keepk] + 1).astype(np.int32)
-
-
-def _fused_candidates(
-    ubs: DataFrame, k: int, heap_factor: float, rescore=None
-) -> DataFrame:
+def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
     """θ derivation + skip filter + gap decode + cross-list dedup in ONE
     streamed operator — the two_phase=False tail of the in-plan path.
-
-    ``rescore=(fwd_bc, q_bc)`` (broadcast CSR tuples from
-    :func:`_vectors_csr`) additionally exact-scores the decoded candidates
-    against the broadcast vectors and emits the FINAL per-query top-k rows
-    (query_id, rank, doc_id, score) — the whole rescore tail collapses into
-    this one operator: no candidate×vector join, no 10^7-pair Arrow
-    boundary, no corpus-wide top-k exchange (guide §8: every decision uses
-    broadcast metadata; only k rows per query leave).  Scores are bitwise
-    identical to :func:`exact_score` (same flat f64 contribution arrays in
-    doc-element order, same `_gather_qw`/`_repair_qkey` floats, same
-    `segment_sums`), and the per-query rank order is the same pinned
-    (score desc, doc_id asc) total order :func:`topk` uses — pinned by
-    test_r6_optimizations.py.  Pairs whose doc or query id is absent from
-    the broadcast tables are dropped, matching the inner joins they
-    replace.
 
     Replaces the window-based `_theta_survivors` → `_decode_docs` →
     `.distinct()` chain (3 exchanges, two of them sorting the gap-blob-laden
@@ -718,116 +397,36 @@ def _fused_candidates(
     each query's co-located block rows.
 
     Value-parity with the windowed derivation (and the driver fast path):
-    θ_q = max over matched terms of the k-th largest per-(query, term) lb —
-    the k-th largest VALUE is tie-order independent, so np.lexsort + segment
-    ranks select exactly the lb the `wt` window's row_number()==k row held;
-    the skip predicate ``ub >= heap_factor × θ`` is the same IEEE-f64
-    comparison, so the surviving block set — and every downstream score — is
-    bitwise identical (test_parity_r4/r5 pin this against the fast path).
-
-    Queries with NO term reaching k blocks keep all their blocks (the
-    windowed path's `theta IS NULL` arm).  Dedup is per query group, which
-    equals the old global `.distinct()` because one query's rows are fully
-    co-located.
+    θ and the skip predicate are :func:`kernel.theta0` /
+    :func:`kernel.keep_blocks`, the same values the `wt` window's
+    row_number()==k row and the filter select, so the surviving block set —
+    and every downstream score — is bitwise identical (test_parity_r4/r5
+    pin this against the fast path).  Queries with NO term reaching k
+    blocks keep all their blocks (the windowed path's `theta IS NULL` arm).
+    Dedup is per query group, which equals the old global `.distinct()`
+    because one query's rows are fully co-located.
     """
-    hf = float(heap_factor)
-    out_schema = (
-        "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-        if rescore is not None
-        else "query_id STRING, doc_id BIGINT"
-    )
-
-    def _score_groups(
-        qids_g: np.ndarray, qs_m: np.ndarray, ds_m: np.ndarray
-    ) -> pd.DataFrame | None:
-        """Exact-score deduped (group, doc) pairs against the broadcast CSRs
-        and keep the per-query top-k — see the rescore contract above."""
-        f_bc, q_bc = rescore
-        f_ids, f_perm, f_starts, f_lens, f_t, f_w = f_bc.value
-        q_ids, q_perm, _qs, _ql, _qt, _qw_flat, q_key, q_w = q_bc.value
-        guids = np.asarray(qids_g, dtype=np.str_)
-        gq = np.searchsorted(q_ids, guids)
-        gq_c = np.minimum(gq, max(q_ids.size - 1, 0))
-        g_ok = (
-            q_ids[gq_c] == guids
-            if q_ids.size
-            else np.zeros(guids.size, dtype=bool)
-        )
-        qi_g = np.where(g_ok, q_perm[gq_c] if q_perm.size else 0, -1)
-        di = np.searchsorted(f_ids, ds_m)
-        di_c = np.minimum(di, max(f_ids.size - 1, 0))
-        d_ok = (
-            f_ids[di_c] == ds_m if f_ids.size else np.zeros(ds_m.size, dtype=bool)
-        )
-        ok = d_ok & (qi_g[qs_m] >= 0)
-        if not ok.all():
-            qs_m, ds_m, di_c = qs_m[ok], ds_m[ok], di_c[ok]
-        if qs_m.size == 0:
-            return None
-        di_v = f_perm[di_c]
-        scores = _score_pairs_csr(
-            qi_g[qs_m], di_v, f_starts, f_lens, f_t, f_w, q_key, q_w
-        )
-        sel, ranks = _topk_select(qs_m, ds_m, scores, k)
-        return pd.DataFrame(
-            {
-                "query_id": qids_g[qs_m[sel]],
-                "rank": ranks,
-                "doc_id": ds_m[sel],
-                "score": scores[sel],
-            }
-        )
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
         qids = pdf["query_id"].to_numpy()
-        g_starts = np.flatnonzero(np.concatenate(([True], qids[1:] != qids[:-1])))
-        g_lens = np.diff(np.concatenate((g_starts, [len(pdf)])))
-        q_of = np.repeat(np.arange(g_starts.size, dtype=np.int64), g_lens)
-        term = pdf["term_id"].to_numpy(dtype=np.int64)
-        ub = pdf["ub"].to_numpy(dtype=np.float64)
-        lb = pdf["lb"].to_numpy(dtype=np.float64)
-
-        # per-(query, term) k-th largest lb, maxed per query (θ phase 0)
-        order = np.lexsort((-lb, term, q_of))
-        qo, to, lbo = q_of[order], term[order], lb[order]
-        seg = np.concatenate(
-            ([True], (qo[1:] != qo[:-1]) | (to[1:] != to[:-1]))
+        starts = kernel.segment_starts(qids)
+        q_of = np.cumsum(starts) - 1
+        theta = kernel.theta0(
+            q_of,
+            pdf["term_id"].to_numpy(dtype=np.int64),
+            pdf["lb"].to_numpy(dtype=np.float64),
+            k,
+            int(q_of[-1]) + 1,
         )
-        seg_starts = np.flatnonzero(seg)
-        seg_lens = np.diff(np.concatenate((seg_starts, [lbo.size])))
-        rank = np.arange(lbo.size, dtype=np.int64) - np.repeat(
-            seg_starts, seg_lens
+        kept = np.flatnonzero(
+            kernel.keep_blocks(
+                pdf["ub"].to_numpy(dtype=np.float64), theta[q_of], heap_factor
+            )
         )
-        kth = rank == k - 1
-        theta = np.full(g_starts.size, -np.inf)
-        kq, kv = qo[kth], lbo[kth]
-        if kq.size:
-            gs = np.flatnonzero(np.concatenate(([True], kq[1:] != kq[:-1])))
-            theta[kq[gs]] = np.maximum.reduceat(kv, gs)
-
-        keep = np.ones(len(pdf), dtype=bool)
-        hasrow = theta[q_of] > -np.inf
-        keep[hasrow] = ub[hasrow] >= hf * theta[q_of][hasrow]
-
-        gaps_col = pdf["gaps"].to_numpy()
-        kept_idx = np.flatnonzero(keep)
-        if kept_idx.size == 0:
+        if kept.size == 0:
             return None
-        ids, counts = codec.delta_decode_multi(
-            [bytes(gaps_col[i]) for i in kept_idx]
-        )
-        qrep = np.repeat(q_of[kept_idx], counts)
-        ids = ids.astype(np.int64)
-        order2 = np.lexsort((ids, qrep))
-        qs_, ds_ = qrep[order2], ids[order2]
-        mask = np.concatenate(
-            ([True], (qs_[1:] != qs_[:-1]) | (ds_[1:] != ds_[:-1]))
-        )
-        if rescore is not None:
-            return _score_groups(qids[g_starts], qs_[mask], ds_[mask])
-        return pd.DataFrame(
-            {"query_id": qids[g_starts][qs_[mask]], "doc_id": ds_[mask]}
-        )
+        qs, ds = kernel.decode_dedup(q_of[kept], pdf["gaps"].to_numpy()[kept])
+        return pd.DataFrame({"query_id": qids[starts][qs], "doc_id": ds})
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -855,7 +454,7 @@ def _fused_candidates(
         .repartition("query_id")
         .sortWithinPartitions("query_id")
     )
-    return parted.mapInPandas(gen, out_schema)
+    return parted.mapInPandas(gen, "query_id STRING, doc_id BIGINT")
 
 
 def _decode_docs(block_rows: DataFrame) -> DataFrame:
@@ -870,13 +469,11 @@ def _decode_docs(block_rows: DataFrame) -> DataFrame:
         for pdf in it:
             if pdf.empty:
                 continue
-            ids, counts = codec.delta_decode_multi(
-                [bytes(b) for b in pdf["gaps"]]
-            )
+            ids, counts = kernel.decode_blocks(pdf["gaps"])
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
-                    "doc_id": ids.astype(np.int64),
+                    "doc_id": ids,
                 }
             )
 
@@ -905,24 +502,6 @@ _DRIVER_THETA_MAX_ROWS = int(
     os.environ.get("SEISMIC_DRIVER_THETA_MAX_ROWS", "1000000")
 )
 
-# Deferred-gaps fast path (experiment, BENCH/BASELINE.md round-5 interactive
-# floor): the block-UB scan job reads NO doc_gaps column at all (Parquet
-# column pruning), so nothing is persisted; gaps are re-fetched from the
-# postings scan for SURVIVING blocks only.  Trades the ubs persist + wide
-# scan for one extra narrow scan job.
-#
-# MEASURED AND REJECTED as a default (tools/bench_serving.py, 1M docs,
-# canary-valid interleaved ABAB, BENCH/serving_r5.json): the extra fetch
-# jobs cost more than skipping the gaps column saves at every batch size
-# (batch 10 median 6.17 s vs 4.20 s base; batch 100: 6.96 vs 4.33).  The
-# gap blobs are small relative to the summaries the UB scan must read
-# anyway, and the persisted ubs frame makes the survivor filter free.
-# Kept env-gated for storage layouts where the gaps column is genuinely
-# expensive to read (e.g. remote object storage with wide blobs).
-_FASTPATH_DEFER_GAPS = (
-    os.environ.get("SEISMIC_FASTPATH_DEFER_GAPS", "0") == "1"
-)
-
 # In-plan dict batches push the union of all query term ids into the postings
 # scan as an IN predicate (result-neutral pruning).  Above this many ids the
 # literal list itself bloats Catalyst optimization / Parquet predicate
@@ -945,28 +524,6 @@ _SCAN_PRUNE_MAX_IDS = int(os.environ.get("SEISMIC_SCAN_PRUNE_MAX_IDS", "2048"))
 # SeismicSparkIndex passes its per-instance registry instead, keeping
 # interleaved searches on different indexes from thrashing each other.
 _DEFAULT_CACHE_REGISTRY: list[DataFrame] = []
-
-
-def merge_sorted_terms(t, w) -> QVec:
-    """THE pinned duplicate-term merge — single source of truth for the
-    fast-path / in-plan / serving-replica bitwise-identity contract.
-
-    (term asc, weight asc) lexsort, then one reduceat per duplicate group:
-    the summation order is a pure function of the (term, weight) multiset,
-    so the merged float is reproducible regardless of input order.  Every
-    caller that merges duplicate query terms MUST route through here
-    (_merge_dup_qvecs, _cut_qvecs, serving.ServingReplica._resolve) — a
-    divergent copy silently breaks the documented bitwise guarantees.
-    """
-    t = np.asarray(t, dtype=np.int64)
-    w = np.asarray(w, dtype=np.float64)
-    order = np.lexsort((w, t))
-    t, w = t[order], w[order]
-    if t.size > 1 and np.any(np.diff(t) == 0):
-        starts = np.flatnonzero(np.concatenate(([True], np.diff(t) != 0)))
-        w = np.add.reduceat(w, starts)
-        t = t[starts]
-    return t, w
 
 
 def _merge_dup_qvecs(qvecs: dict[str, QVec]) -> dict[str, QVec]:
@@ -1005,12 +562,22 @@ def _cut_qvecs(qvecs: dict[str, QVec], query_cut: int) -> list[tuple]:
     return rows
 
 
+def _decode_rows(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(query_id, gaps) block rows → deduped candidates as
+    ``(unique qids sorted, per-pair qid code, per-pair doc_id)`` — integer
+    codes, not pandas object rows (an exact-search batch decodes hundreds
+    of thousands of (query, doc) pairs; object-dtype drop_duplicates is
+    ~10× slower)."""
+    uq, q_of = np.unique(rows["query_id"].to_numpy(), return_inverse=True)
+    return (uq, *kernel.decode_dedup(q_of.astype(np.int64), rows["gaps"]))
+
+
 def _compact_rescore(
     block_rows: DataFrame, forward: DataFrame, qdf: DataFrame, k: int
 ) -> DataFrame:
     """Low-latency rescore tail for SMALL surviving-block sets: decode and
     dedup candidates in ONE task (replacing _decode_docs' `.distinct()`
-    shuffle with an in-partition np.unique), then broadcast the candidate
+    shuffle with an in-partition dedup), then broadcast the candidate
     ids into the forward join — the forward scan stays parallel, but the
     only exchange left in the chain is the final tiny top-k window.
 
@@ -1022,23 +589,10 @@ def _compact_rescore(
 
     def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one coalesced partition → a partition-wide dedup is a full dedup
-        frames = []
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids, counts = codec.delta_decode_multi(
-                [bytes(b) for b in pdf["gaps"]]
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
-                        "doc_id": ids.astype(np.int64),
-                    }
-                )
-            )
+        frames = [pdf for pdf in it if not pdf.empty]
         if frames:
-            yield pd.concat(frames, ignore_index=True).drop_duplicates()
+            uq, qs, ds = _decode_rows(pd.concat(frames, ignore_index=True))
+            yield pd.DataFrame({"query_id": uq[qs], "doc_id": ds})
 
     cands = (
         block_rows.select("query_id", "gaps")
@@ -1050,52 +604,16 @@ def _compact_rescore(
     return topk(scored, k)
 
 
-def _fetch_gaps(postings: DataFrame, keys: pd.DataFrame) -> DataFrame:
-    """(query_id, gaps) rows for an explicit set of surviving block keys.
-
-    ``keys`` is a small driver-side frame (query_id, term_id, salt, block) —
-    bounded by the fast-path gate.  The postings scan reads ONLY
-    (term_id, salt, blocks, doc_gaps) for the keys' term ids (IN-pruned row
-    groups), explodes to block granularity JVM-side (arrays_zip — no Python),
-    and a broadcast join keeps exactly the requested (query, block) pairs.
-    Feeds :func:`_compact_rescore` / :func:`_decode_docs` unchanged.
-    """
-    spark = postings.sparkSession
-    term_ids = sorted({int(t) for t in keys["term_id"].unique()})
-    kdf = spark.createDataFrame(
-        keys[["query_id", "term_id", "salt", "block"]],
-        "query_id STRING, term_id INT, salt INT, block INT",
-    )
-    if len(term_ids) <= _SCAN_PRUNE_MAX_IDS:
-        # same literal-list cap as everywhere else (see _SCAN_PRUNE_MAX_IDS);
-        # the broadcast kdf join below keeps the result identical without it
-        postings = postings.filter(F.col("term_id").isin(term_ids))
-    else:
-        # above the cap, prune via a broadcast semi-join instead of dropping
-        # pruning entirely: unlike the post-explode kdf join, this term_id
-        # join sits BELOW the Generate node, so non-matching posting rows
-        # are discarded before their gap blobs are exploded to block rows
-        # (r5 ADVICE item; result-identical — the kdf join is a further
-        # subset of these term ids).
-        tdf = postings.sparkSession.createDataFrame(
-            [(int(t),) for t in term_ids], "term_id INT"
-        )
-        postings = postings.join(F.broadcast(tdf), "term_id")
-    exploded = (
-        postings
-        .select(
-            "term_id", "salt",
-            F.explode(F.arrays_zip("blocks", "doc_gaps")).alias("z"),
-        )
-        .select(
-            "term_id", "salt",
-            F.col("z.blocks").alias("block"),
-            F.col("z.doc_gaps").alias("gaps"),
-        )
-    )
-    return exploded.join(F.broadcast(kdf), ["term_id", "salt", "block"]).select(
-        "query_id", "gaps"
-    )
+def _rescore_blocks(
+    block_rows: DataFrame, n_blocks: int, forward: DataFrame, qdf: DataFrame, k: int
+) -> DataFrame:
+    """Decode → exact rescore → top-k of surviving block rows: the compact
+    tail up to ``_COMPACT_TAIL_MAX_BLOCKS`` blocks, the distributed
+    decode/distinct chain above it."""
+    if n_blocks <= _COMPACT_TAIL_MAX_BLOCKS:
+        return _compact_rescore(block_rows, forward, qdf, k)
+    cands = _decode_docs(block_rows)
+    return topk(exact_score(cands, forward, qdf, broadcast_queries=True), k)
 
 
 # Compact-tail gate: blocks hold at most a few hundred docs, so ≤4096
@@ -1132,109 +650,80 @@ _LOCAL_SCORE_MAX_BYTES = int(
     os.environ.get("SEISMIC_LOCAL_SCORE_MAX_BYTES", str(384 << 20))
 )
 
-_OVERFLOW = object()  # sentinel: local fast path exceeded its row cap
+# threads for driver-side pair scoring (kernel.score_pairs)
+_DRIVER_THREADS = min(8, os.cpu_count() or 1)
+
+_RESULT_SCHEMA = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
 
 
-def _theta0_from_narrow(narrow: pd.DataFrame, k: int) -> dict[str, float]:
-    """Phase-0 θ per query from a collected block table: per (query, term)
-    k-th largest block-max lower bound, maxed over the query's matched terms
-    — the same f64 values the in-plan window aggregates select."""
-    neg_inf = float("-inf")
-    theta: dict[str, float] = {}
-    for (qid, _tid), grp in narrow.groupby(["query_id", "term_id"], sort=False):
-        lb = grp["lb"].to_numpy(dtype=np.float64)
-        if lb.size >= k:
-            kth = float(np.partition(lb, lb.size - k)[lb.size - k])
-            if kth > theta.get(qid, neg_inf):
-                theta[qid] = kth
-    return theta
-
-
-def _decode_rows_coded(
-    rows: pd.DataFrame,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Driver-side decode + cross-list dedup of collected block rows — the
-    same codec call `_compact_rescore` runs in its coalesced executor task,
-    deduped by the same lexsort/mask pass `_fused_candidates` uses (integer
-    codes, not pandas object rows: an exact-search batch decodes hundreds of
-    thousands of (query, doc) pairs and object-dtype drop_duplicates is
-    ~10× slower).  Dedup is set-identity, so the candidate set is unchanged.
-    Returns ``(unique_qids sorted, per-pair qid code, per-pair doc_id)``."""
-    ids, counts = codec.delta_decode_multi([bytes(b) for b in rows["gaps"]])
-    uq, qcodes = np.unique(rows["query_id"].to_numpy(), return_inverse=True)
-    qrep = np.repeat(qcodes.astype(np.int64), counts)
-    d = ids.astype(np.int64)
-    order = np.lexsort((d, qrep))
-    qs_, ds_ = qrep[order], d[order]
-    m = np.concatenate(
-        ([True], (qs_[1:] != qs_[:-1]) | (ds_[1:] != ds_[:-1]))
-    )
-    return uq, qs_[m], ds_[m]
+def _result_df(spark: SparkSession, pdf: pd.DataFrame | None) -> DataFrame:
+    """A driver-side (query_id, rank, doc_id, score) frame as a DataFrame."""
+    if pdf is None or pdf.empty:
+        return spark.createDataFrame([], _RESULT_SCHEMA)
+    return spark.createDataFrame(pdf, _RESULT_SCHEMA)
 
 
 def _qside_from_qvecs(
     qvecs: dict[str, QVec]
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Driver-side combined-key query table from resolved query vectors:
-    the same row·2^32+term construction (and `_repair_qkey` merge) the
-    Arrow-batch scorers apply, so `_gather_qw` returns bitwise-identical
-    weights.  Rows follow sorted-qid order; lookup by searchsorted."""
+    the same :func:`kernel.query_keys` construction the Arrow-batch scorers
+    apply, so gathered weights are bitwise identical.  Rows follow
+    sorted-qid order; lookup by searchsorted."""
     qids = sorted(qvecs)
     ts = [np.asarray(qvecs[q][0], dtype=np.int64) for q in qids]
-    lens = np.fromiter((t.size for t in ts), dtype=np.int64, count=len(ts))
-    t_flat = np.concatenate(ts) if ts else np.empty(0, dtype=np.int64)
-    w_flat = (
-        np.concatenate([np.asarray(qvecs[q][1], dtype=np.float64) for q in qids])
-        if ts
-        else np.empty(0, dtype=np.float64)
-    )
-    row_rep = np.repeat(np.arange(len(ts), dtype=np.int64), lens)
-    qkey, qw = _repair_qkey(row_rep * _KEY_SHIFT + t_flat, w_flat)
+    ws = [np.asarray(qvecs[q][1], dtype=np.float64) for q in qids]
+    lens = np.array([t.size for t in ts], dtype=np.int64)
+    qkey, qw = kernel.query_keys(lens, np.concatenate(ts), np.concatenate(ws))
     return np.asarray(qids, dtype=np.str_), qkey, qw
 
 
-def _score_topk_driver(
-    uq: np.ndarray,
-    qs: np.ndarray,
-    ds: np.ndarray,
-    qids_sorted: np.ndarray,
-    qkey: np.ndarray,
-    qw: np.ndarray,
-    fwd_csr,
-    k: int,
-) -> pd.DataFrame:
-    """Exact-score coded candidate pairs against the collected forward CSR
-    and keep the per-query top-k — the driver twin of the fused operator's
-    `_score_groups` (same `_score_pairs_csr` floats, same `_topk_select`
-    pinned order).  Pairs whose doc id is absent from the forward table are
-    dropped, matching the inner join they replace."""
+def _local_topk(rows: pd.DataFrame, qside, fwd_csr, k: int) -> pd.DataFrame:
+    """Decode + dedup collected block rows, exact-score the candidates
+    against the driver forward CSR (:func:`kernel.score_pairs`) and keep
+    the per-query top-k (:func:`kernel.topk_frame`).  Docs absent from the
+    forward table are dropped, matching the inner join they replace."""
+    uq, qs, ds = _decode_rows(rows)
+    qids_sorted, qkey, qw = qside
     f_ids, f_perm, f_starts, f_lens, f_t, f_w = fwd_csr
-    qi_of_code = np.searchsorted(qids_sorted, np.asarray(uq, dtype=np.str_))
-    di = np.searchsorted(f_ids, ds)
-    di_c = np.minimum(di, max(f_ids.size - 1, 0))
-    ok = f_ids[di_c] == ds if f_ids.size else np.zeros(ds.size, dtype=bool)
+    di = np.minimum(np.searchsorted(f_ids, ds), max(f_ids.size - 1, 0))
+    ok = f_ids[di] == ds if f_ids.size else np.zeros(ds.size, dtype=bool)
     if not ok.all():
-        qs, ds, di_c = qs[ok], ds[ok], di_c[ok]
-    if qs.size == 0:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, dtype=object),
-             "rank": np.empty(0, dtype=np.int32),
-             "doc_id": np.empty(0, dtype=np.int64),
-             "score": np.empty(0, dtype=np.float64)}
+        qs, ds, di = qs[ok], ds[ok], di[ok]
+    qi_of_code = np.searchsorted(qids_sorted, np.asarray(uq, dtype=np.str_))
+    scores = kernel.score_pairs(
+        qi_of_code[qs], f_perm[di], f_starts, f_lens, f_t, f_w, qkey, qw,
+        threads=_DRIVER_THREADS,
+    )
+    return kernel.topk_frame(uq, qs, ds, scores, k)
+
+
+def _driver_keep(
+    tbl: pd.DataFrame, k: int, heap_factor: float, p1_kth=None
+) -> np.ndarray:
+    """Survivor mask over a collected block table: phase-0 θ
+    (:func:`kernel.theta0`), the two_phase tightening when ``p1_kth`` is
+    given, then :func:`kernel.keep_blocks` — the same f64 values and IEEE
+    predicate as the in-plan derivation.
+
+    ``p1_kth(best_rows)`` exact-scores the best-ub block of every matched
+    list — first by (ub desc, salt asc, block asc), posting_list.rs:149-185
+    — and returns ``(query ids, k-th best score)`` arrays; θ is maxed with
+    them."""
+    uq, q_of = np.unique(tbl["query_id"].to_numpy(), return_inverse=True)
+    term = tbl["term_id"].to_numpy(dtype=np.int64)
+    ub = tbl["ub"].to_numpy(dtype=np.float64)
+    theta = kernel.theta0(q_of, term, tbl["lb"].to_numpy(dtype=np.float64), k, uq.size)
+    if p1_kth is not None:
+        order = np.lexsort(
+            (tbl["block"].to_numpy(), tbl["salt"].to_numpy(), -ub, term, q_of)
         )
-    scores = _score_pairs_csr(
-        qi_of_code[qs], f_perm[di_c], f_starts, f_lens, f_t, f_w, qkey, qw,
-        threads=min(8, os.cpu_count() or 1),
-    )
-    sel, ranks = _topk_select(qs, ds, scores, k)
-    return pd.DataFrame(
-        {
-            "query_id": uq[qs[sel]],
-            "rank": ranks,
-            "doc_id": ds[sel],
-            "score": scores[sel],
-        }
-    )
+        best = order[kernel.segment_starts(q_of[order], term[order])]
+        qids, kth = p1_kth(tbl.iloc[best])
+        if len(qids):
+            i = np.searchsorted(uq, np.asarray(qids, dtype=object))
+            theta[i] = np.maximum(theta[i], np.asarray(kth, dtype=np.float64))
+    return kernel.keep_blocks(ub, theta[q_of], heap_factor)
 
 
 def _driver_theta_local(
@@ -1245,68 +734,40 @@ def _driver_theta_local(
     heap_factor: float,
     two_phase: bool,
     fwd_csr,
-) -> DataFrame:
+) -> DataFrame | None:
     """One-collect, fully-local fast path (see ``_DRIVER_GAPS_MAX_ROWS``):
     block table + gap blobs arrive in a single bounded toPandas; θ (phase 0
     and the two_phase tightening), the skip filter, candidate decode, exact
     rescore (against the caller's size-gated forward CSR — the reference's
     own in-process scoring architecture, inverted_index.rs:153-234) and
-    top-k ALL run on the driver.  The batch costs exactly ONE Spark job —
-    the block-UB scan feeding the collect — instead of the persisted-ubs
-    formulation's 12–18 AQE stage jobs (each ~0.2–0.7 s of scheduling
-    floor).
+    top-k ALL run on the driver, in the kernel.  The batch costs exactly
+    ONE Spark job — the block-UB scan feeding the collect — instead of the
+    persisted-ubs formulation's 12–18 AQE stage jobs (each ~0.2–0.7 s of
+    scheduling floor).
 
     Value parity is exact and pinned (test_search_fastpath): θ is selected
-    from the same collected f64 ub/lb values, phase-1 scores and final
-    scores come from `_score_pairs_csr` (bitwise-identical contribution
-    arrays to `exact_score`), the skip predicate is the same IEEE
-    comparison, and ranking is `_topk_select`'s pinned total order.
-    Returns ``_OVERFLOW`` when the block table exceeds the cap — the caller
-    falls back to the persisted-ubs formulation, which keeps gap blobs on
-    the executors.
+    from the same collected f64 ub/lb values, phase-1 and final scores come
+    from the kernel's row scorer (bitwise-identical contribution arrays to
+    `exact_score`), the skip predicate is the same IEEE comparison, and
+    ranking is the kernel's pinned total order.  Returns None when the
+    block table exceeds the cap — the caller falls back to the
+    persisted-ubs formulation, which keeps gap blobs on the executors.
     """
-    ubs = _block_ubs(matched)
-    tbl = ubs.limit(_DRIVER_GAPS_MAX_ROWS + 1).toPandas()
+    tbl = _block_ubs(matched).limit(_DRIVER_GAPS_MAX_ROWS + 1).toPandas()
     if len(tbl) > _DRIVER_GAPS_MAX_ROWS:
-        return _OVERFLOW
-    schema = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
+        return None
     if tbl.empty:
-        return spark.createDataFrame([], schema)
-    neg_inf = float("-inf")
-    theta = _theta0_from_narrow(tbl, k)
-    qids_sorted, qkey, qw = _qside_from_qvecs(qvecs)
+        return _result_df(spark, None)
+    qside = _qside_from_qvecs(qvecs)
 
-    if two_phase:
-        best = tbl.sort_values(
-            ["query_id", "term_id", "ub", "salt", "block"],
-            ascending=[True, True, False, True, True],
-            kind="stable",
-        ).groupby(["query_id", "term_id"], sort=False).head(1)
-        p1 = _score_topk_driver(
-            *_decode_rows_coded(best), qids_sorted, qkey, qw, fwd_csr, k
-        )
+    def p1_kth(best: pd.DataFrame):
+        p1 = _local_topk(best, qside, fwd_csr, k)
         kth = p1[p1["rank"] == k]
-        for qid, sc in zip(kth["query_id"], kth["score"]):
-            if sc > theta.get(qid, neg_inf):
-                theta[qid] = float(sc)
+        return kth["query_id"].to_numpy(), kth["score"].to_numpy()
 
-    if theta:
-        th = tbl["query_id"].map(theta).to_numpy(dtype=np.float64)
-        has = ~np.isnan(th)
-        keep = np.ones(len(tbl), dtype=bool)
-        # identical IEEE f64 predicate to the in-plan filter
-        keep[has] = tbl["ub"].to_numpy(dtype=np.float64)[has] >= (
-            heap_factor * th[has]
-        )
-        survivors = tbl if keep.all() else tbl.loc[keep]
-    else:
-        survivors = tbl
-    res = _score_topk_driver(
-        *_decode_rows_coded(survivors), qids_sorted, qkey, qw, fwd_csr, k
-    )
-    if res.empty:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(res, schema)
+    keep = _driver_keep(tbl, k, heap_factor, p1_kth if two_phase else None)
+    survivors = tbl if keep.all() else tbl.loc[keep]
+    return _result_df(spark, _local_topk(survivors, qside, fwd_csr, k))
 
 
 def _driver_theta_search(
@@ -1343,6 +804,10 @@ def _driver_theta_search(
               (broadcast literal), decode, exact re-score, top-k — the gap
               blobs never leave the executors
 
+    With a forward CSR (``fwd_csr``) the whole batch runs locally instead
+    (:func:`_driver_theta_local`); its row cap falls back to the
+    persisted-ubs formulation above.
+
     Float parity with the in-plan path is exact: θ is selected by
     comparisons over the same f64 values the plan would aggregate (k-th
     largest lb, k-th best phase-1 score), and the skip predicate
@@ -1359,11 +824,8 @@ def _driver_theta_search(
     itself is bounded) — the caller then falls back to the in-plan path.
     """
     cut_rows = _cut_qvecs(qvecs, query_cut)
-    empty = spark.createDataFrame(
-        [], "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-    )
     if not cut_rows:
-        return empty
+        return _result_df(spark, None)
     cterms = spark.createDataFrame(
         cut_rows, "query_id STRING, term_id INT, qw DOUBLE"
     )
@@ -1386,121 +848,50 @@ def _driver_theta_search(
         .join(F.broadcast(cterms), "term_id")
         .join(F.broadcast(qdf), "query_id")
     )
-    defer = _FASTPATH_DEFER_GAPS
     if cache_registry is not None:
         retire_caches(cache_registry)
-    if fwd_csr is not None and not defer:
-        # r6 local fast path: one bounded collect (block table + gaps),
-        # then θ, decode, exact rescore (driver CSR) and top-k all local —
-        # result-identical, ONE Spark job instead of the persisted-ubs
-        # formulation's 12–18 AQE jobs.  _OVERFLOW (block table over the
-        # cap) falls through to the persisted-ubs path below (one extra run
-        # of the UB scan in that rare regime).
+    if fwd_csr is not None:
         res = _driver_theta_local(
             spark, matched, qvecs, k, heap_factor, two_phase, fwd_csr
         )
-        if res is not _OVERFLOW:
+        if res is not None:
             return res
-    ubs = _block_ubs(matched, with_gaps=not defer)
-    if not defer:
-        # gaps ride along in the ubs frame: persist it so the rescore tail
-        # filters the cached frame instead of re-running the scan
-        ubs = ubs.persist()
-        if cache_registry is not None:
-            cache_registry.append(ubs)
+    # gaps ride along in the ubs frame: persist it so the rescore tail
+    # filters the cached frame instead of re-running the scan
+    ubs = _block_ubs(matched).persist()
+    if cache_registry is not None:
+        cache_registry.append(ubs)
 
     # Collect with a hard row cap: the auto-gate bounds batch × query_cut,
     # but blocks-per-list is data-dependent, so a head-term-heavy batch on a
     # many-block index could otherwise collect an unexpectedly wide table.
     # limit(cap+1) bounds the transfer itself; hitting the cap returns None
     # and the caller falls back to the in-plan θ derivation.
+    key_cols = ["query_id", "term_id", "salt", "block"]
     narrow = (
-        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb")
+        ubs.select(*key_cols, "ub", "lb")
         .limit(_DRIVER_THETA_MAX_ROWS + 1)
         .toPandas()
     )
     if len(narrow) > _DRIVER_THETA_MAX_ROWS:
         return None
     if narrow.empty:
-        return empty
+        return _result_df(spark, None)
 
-    neg_inf = float("-inf")
-    # phase 0: per (query, term) k-th largest block-max lower bound, maxed
-    # over the query's matched terms (same value as the wt window + rank-k
-    # filter — the k-th largest VALUE is order-independent)
-    theta = _theta0_from_narrow(narrow, k)
+    def blocks_of(keys: pd.DataFrame) -> DataFrame:
+        kdf = spark.createDataFrame(
+            keys[key_cols], "query_id STRING, term_id INT, salt INT, block INT"
+        )
+        return ubs.join(F.broadcast(kdf), key_cols)
 
-    if two_phase:
-        best = (
-            narrow.sort_values(
-                ["query_id", "term_id", "ub", "salt", "block"],
-                ascending=[True, True, False, True, True],
-                kind="stable",
-            )
-            .groupby(["query_id", "term_id"], sort=False)
-            .head(1)[["query_id", "term_id", "salt", "block"]]
-        )
-        if defer:
-            best_blocks = _fetch_gaps(postings, best)
-        else:
-            best_df = spark.createDataFrame(
-                best, "query_id STRING, term_id INT, salt INT, block INT"
-            )
-            best_blocks = ubs.join(
-                F.broadcast(best_df), ["query_id", "term_id", "salt", "block"]
-            )
-        if len(best) <= _COMPACT_TAIL_MAX_BLOCKS:
-            p1_topk = _compact_rescore(best_blocks, forward, qdf, k)
-        else:
-            p1_topk = topk(
-                exact_score(
-                    _decode_docs(best_blocks), forward, qdf,
-                    broadcast_queries=True,
-                ),
-                k,
-            )
-        for r in (
-            p1_topk
-            .filter(F.col("rank") == k)
-            .select("query_id", "score")
-            .collect()
-        ):
-            if r["score"] > theta.get(r["query_id"], neg_inf):
-                theta[r["query_id"]] = r["score"]
+    def p1_kth(best: pd.DataFrame):
+        p1 = _rescore_blocks(blocks_of(best), len(best), forward, qdf, k)
+        rows = p1.filter(F.col("rank") == k).select("query_id", "score").collect()
+        return [r["query_id"] for r in rows], [r["score"] for r in rows]
 
-    if theta:
-        th = narrow["query_id"].map(theta).to_numpy(dtype=np.float64)
-        has = ~np.isnan(th)
-        keep = np.ones(len(narrow), dtype=bool)
-        # identical IEEE f64 predicate to the in-plan filter
-        keep[has] = narrow["ub"].to_numpy(dtype=np.float64)[has] >= (
-            heap_factor * th[has]
-        )
-    else:
-        keep = np.ones(len(narrow), dtype=bool)
-
-    if defer:
-        # no cached frame to filter — fetch gaps for the surviving keys
-        survivors = _fetch_gaps(
-            postings, narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
-        )
-    elif keep.all():
-        survivors = ubs
-    else:
-        keys = narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
-        survivors = ubs.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    keys, "query_id STRING, term_id INT, salt INT, block INT"
-                )
-            ),
-            ["query_id", "term_id", "salt", "block"],
-        )
-    if int(keep.sum()) <= _COMPACT_TAIL_MAX_BLOCKS:
-        return _compact_rescore(survivors, forward, qdf, k)
-    cands = _decode_docs(survivors)
-    scored = exact_score(cands, forward, qdf, broadcast_queries=True)
-    return topk(scored, k)
+    keep = _driver_keep(narrow, k, heap_factor, p1_kth if two_phase else None)
+    survivors = ubs if keep.all() else blocks_of(narrow.loc[keep])
+    return _rescore_blocks(survivors, int(keep.sum()), forward, qdf, k)
 
 
 def retire_caches(cache_registry: list[DataFrame]) -> None:
@@ -1532,7 +923,6 @@ def batch_search(
     broadcast_queries: bool | None = None,
     cache_registry: list[DataFrame] | None = None,
     driver_theta: bool | None = None,
-    rescore_bcast: bool = False,
     local_score: bool = False,
     csr_cache: dict | None = None,
 ) -> DataFrame:
@@ -1542,7 +932,7 @@ def batch_search(
     broadcast) or a DataFrame with QUERIES_SCHEMA (bulk path, e.g. every doc
     as a query for κ-NN).  ``q_terms`` SHOULD be sorted ascending per row
     with distinct ids; unsorted rows are repaired batch-side and duplicate
-    ids merged by weight sum (see _query_keys).  Returns (query_id, rank,
+    ids merged by weight sum (see kernel.repair_qkey).  Returns (query_id, rank,
     doc_id, score); no driver-side loops or mid-plan actions.
 
     ``cache_registry``: caller-scoped lifecycle for the persisted ubs frame
@@ -1558,14 +948,6 @@ def batch_search(
     17–24).  Default (None) auto-enables for driver-side dict batches of at
     most ``$SEISMIC_DRIVER_THETA_MAX`` (1024) queries; DataFrame query sets
     always use the in-plan derivation.
-
-    ``rescore_bcast`` (two_phase=False in-plan tail only): collect forward
-    and query vectors into broadcast CSR arrays and fuse exact rescore +
-    per-query top-k into the candidate operator (:func:`_fused_candidates`)
-    — result-identical; candidate×vector pair rows never materialize.  The
-    CALLER must gate on vector-table size (see knn.build_knn — two bounded
-    collects of ≈ n·avgdl·16 B each); ungated DataFrame-scale corpora
-    belong on the default join path.
 
     ``local_score`` (fast-path dict batches only): collect the forward
     table once into a driver-side CSR (cached in ``csr_cache`` when the
@@ -1599,13 +981,7 @@ def batch_search(
             and len(queries) * query_cut <= _COMPACT_TAIL_MAX_BLOCKS
         )
     if driver_theta and small:
-        fwd_csr = None
-        if local_score and not _FASTPATH_DEFER_GAPS:
-            fwd_csr = csr_cache.get("forward") if csr_cache is not None else None
-            if fwd_csr is None:
-                fwd_csr = _vectors_csr(forward, "doc_id", "terms", "weights")
-                if csr_cache is not None:
-                    csr_cache["forward"] = fwd_csr
+        fwd_csr = _forward_csr(forward, csr_cache) if local_score else None
         res = _driver_theta_search(
             spark, postings, forward, queries, qdf, k, query_cut,
             heap_factor, two_phase, cache_registry, fwd_csr=fwd_csr,
@@ -1643,17 +1019,6 @@ def batch_search(
         # bitwise-identical (see _fused_candidates).
         if cache_registry is not None:
             retire_caches(cache_registry)
-        if rescore_bcast:
-            sc = spark.sparkContext
-            rs = (
-                sc.broadcast(_vectors_csr(forward, "doc_id", "terms", "weights")),
-                sc.broadcast(
-                    _vectors_csr(
-                        qdf, "query_id", "q_terms", "q_weights", with_qkey=True
-                    )
-                ),
-            )
-            return _fused_candidates(ubs, k, heap_factor, rescore=rs)
         cands = _fused_candidates(ubs, k, heap_factor)
         scored = exact_score(
             cands, forward, qdf, broadcast_queries=broadcast_queries
@@ -1823,49 +1188,31 @@ def bruteforce_search(
 
     ``local_score`` (dict batches, caller-gated like batch_search's): score
     every (query, doc) pair on the driver against the collected forward CSR
-    — the same `_score_pairs_csr` floats, the same ``score > 0`` IEEE
-    predicate, the same pinned top-k order, so results are identical to the
-    crossJoin formulation."""
+    — the same kernel row scorer, the same ``score > 0`` IEEE predicate,
+    the same pinned top-k order, so results are identical to the crossJoin
+    formulation."""
     qdf, small = _as_queries_df(spark, queries)
     if small and local_score and queries:
         qvecs = {
             q: v for q, v in queries.items()
             if np.asarray(v[0]).size > 0
         }
-        fwd_csr = csr_cache.get("forward") if csr_cache is not None else None
-        if fwd_csr is None:
-            fwd_csr = _vectors_csr(forward, "doc_id", "terms", "weights")
-            if csr_cache is not None:
-                csr_cache["forward"] = fwd_csr
-        f_ids, f_perm, f_starts, f_lens, f_t, f_w = fwd_csr
-        schema = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
+        f_ids, f_perm, f_starts, f_lens, f_t, f_w = _forward_csr(forward, csr_cache)
         nq = len(qvecs)
         if nq == 0 or f_ids.size == 0:
-            return spark.createDataFrame([], schema)
+            return _result_df(spark, None)
         if nq * f_t.size <= _BRUTE_LOCAL_MAX_ELEMS:
             qids_sorted, qkey, qw = _qside_from_qvecs(qvecs)
             qs = np.repeat(np.arange(nq, dtype=np.int64), f_ids.size)
             di = np.tile(np.arange(f_ids.size, dtype=np.int64), nq)
-            ds = f_ids[di]
-            scores = _score_pairs_csr(
+            scores = kernel.score_pairs(
                 qs, f_perm[di], f_starts, f_lens, f_t, f_w, qkey, qw,
-                threads=min(8, os.cpu_count() or 1),
+                threads=_DRIVER_THREADS,
             )
             pos = scores > 0.0
-            qs, ds, scores = qs[pos], ds[pos], scores[pos]
-            if qs.size == 0:
-                return spark.createDataFrame([], schema)
-            sel, ranks = _topk_select(qs, ds, scores, k)
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "query_id": qids_sorted[qs[sel]].astype(object),
-                        "rank": ranks,
-                        "doc_id": ds[sel],
-                        "score": scores[sel],
-                    }
-                ),
-                schema,
+            return _result_df(
+                spark,
+                kernel.topk_frame(qids_sorted, qs[pos], f_ids[di][pos], scores[pos], k),
             )
     qdf = qdf.filter(F.size("q_terms") > 0)
     cands = qdf.select("query_id").crossJoin(forward.select("doc_id"))

@@ -41,8 +41,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from seismic_spark import codec
-from seismic_spark import search as srch
+from seismic_spark import codec, kernel
 
 __all__ = ["ServingReplica", "TermPostings"]
 
@@ -71,37 +70,6 @@ class TermPostings:
     m_lens: np.ndarray  # int64[nb]
 
 
-def _gather_qw(qt: np.ndarray, qw: np.ndarray, terms: np.ndarray) -> np.ndarray:
-    """Per-element query weight, 0.0 at misses — single-query twin of
-    search._gather_qw (same searchsorted/clip/where construction)."""
-    if terms.size == 0:
-        return np.empty(0, dtype=np.float64)
-    idx = np.searchsorted(qt, terms)
-    idx_c = np.minimum(idx, max(qt.size - 1, 0))
-    hit = (qt[idx_c] == terms) if qt.size else np.zeros(terms.size, dtype=bool)
-    return np.where(hit, qw[idx_c] if qw.size else 0.0, 0.0)
-
-
-def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Indices selecting CSR slices [starts_i, starts_i+lens_i) flattened."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    offsets = np.cumsum(lens) - lens
-    return np.arange(total, dtype=np.int64) + np.repeat(starts - offsets, lens)
-
-
-def _list_flat(col) -> tuple:
-    """Arrow list column → (flat child Array, lens int64[n]).  `flatten()`
-    adjusts for any slice offset, `list_value_length` gives per-row lengths
-    without touching Python objects."""
-    import pyarrow.compute as pc
-
-    arr = col.combine_chunks()
-    lens = pc.list_value_length(arr).to_numpy().astype(np.int64)
-    return arr.flatten(), lens
-
-
 def _read_snapshot(idx, table: str, columns: list[str]):
     """Direct multithreaded Arrow read of an UNTRANSFORMED parquet snapshot
     (``idx.storage_paths``, set by load()/CheckpointedBuild) — bypasses the
@@ -123,19 +91,6 @@ def _read_snapshot(idx, table: str, columns: list[str]):
         return None
 
 
-def _binary_flat(bin_arr) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow Binary/LargeBinary array → (concatenated uint8 view, per-value
-    byte lengths) with no per-value Python objects and no data copy."""
-    import pyarrow as pa
-
-    off_dtype = np.int64 if pa.types.is_large_binary(bin_arr.type) else np.int32
-    voffs = np.frombuffer(bin_arr.buffers()[1], dtype=off_dtype)[
-        bin_arr.offset : bin_arr.offset + len(bin_arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(bin_arr.buffers()[2], dtype=np.uint8)
-    return data[voffs[0] : voffs[-1]], np.diff(voffs)
-
-
 class ServingReplica:
     """In-memory twin of a `SeismicSparkIndex` for interactive serving.
 
@@ -144,11 +99,6 @@ class ServingReplica:
     index's `batch_search` takes and returns a pandas DataFrame with the
     same columns `(query_id, rank, doc_id, score)` and bit-identical values.
     """
-
-    # Dense query-weight LUT gate: one f64 slot per component id (32 MB at
-    # the 4M default).  Larger id spaces fall back to the searchsorted
-    # gather — value-identical either way.
-    _LUT_MAX_DIM = 1 << 22
 
     def __init__(
         self,
@@ -174,22 +124,19 @@ class ServingReplica:
         self.fwd_terms = fwd_terms
         self.fwd_weights = fwd_weights
         self.config = config
-        # per-query dense weight table (r6, VERDICT #4): batch_search
+        # per-query dense weight table (r6, VERDICT #4): _search_resolved
         # scatters the CURRENT query's ~10 weights into it before the UB /
         # rescore gathers and zeroes them after, so every per-element
         # query-weight lookup is ONE fancy-index gather instead of a
         # 4-pass searchsorted/clip/eq/where — the same value (stored
         # weight at hits, 0.0 at misses), so floats are unchanged.  All
         # gathered id spaces (summary terms, forward terms ⊆ corpus
-        # components; query ids ⊆ vocab ids) are covered by dim.
+        # components; query ids ⊆ vocab ids) are covered by dim; over
+        # kernel.LUT_MAX_DIM the searchsorted gather runs instead.
         dim = int(fwd_terms.max()) + 1 if fwd_terms.size else 0
         if vocab:
             dim = max(dim, max(vocab.values()) + 1)
-        self._qw_lut = (
-            np.zeros(dim, dtype=np.float64)
-            if 0 < dim <= self._LUT_MAX_DIM
-            else None
-        )
+        self._qw_lut = np.zeros(dim) if kernel.lut_size(dim) else None
 
     # -------------------------------------------------- pickle support ----
     # A replica is broadcast to executors for the map-only κ-NN path (r6
@@ -289,8 +236,6 @@ class ServingReplica:
         # block of every term, and summaries dequantized in one flat f32
         # pass — identical arithmetic to the executor scan (_block_ubs),
         # so hydration speed never trades against float identity.
-        import pyarrow.compute as pc
-
         p_cols = [
             "term_id", "salt", "blocks", "doc_gaps", "block_max",
             "summary_terms", "summary_codes", "summary_min", "summary_quant",
@@ -312,37 +257,29 @@ class ServingReplica:
         term_id = tbl.column("term_id").combine_chunks().to_numpy().astype(np.int64)
         salt = tbl.column("salt").combine_chunks().to_numpy().astype(np.int32)
 
-        blocks_child, nb = _list_flat(tbl.column("blocks"))
-        blocks_g = blocks_child.to_numpy().astype(np.int32, copy=False)
-        bmax_child, _ = _list_flat(tbl.column("block_max"))
+        blocks_g, nb = kernel.list_flat(tbl.column("blocks"), np.int32)
         # stored FloatType column — f32→f64 widening is exact, the same
         # widening the executor scan does
-        bmax_g = bmax_child.to_numpy().astype(np.float64)
+        bmax_g, _ = kernel.list_flat(tbl.column("block_max"), np.float64)
 
-        gaps_child, _ = _list_flat(tbl.column("doc_gaps"))
-        gaps_concat, gaps_lens = _binary_flat(gaps_child)
-        m_flat, m_lens = codec.delta_decode_concat(gaps_concat, gaps_lens)
+        gaps_child, _ = kernel.list_flat(tbl.column("doc_gaps"))
+        m_flat, m_lens = codec.delta_decode_concat(*kernel.binary_flat(gaps_child))
         m_ids_g = m_flat.view(np.int64)  # ids < 2^63 — free reinterpret
         m_lens_g = m_lens.astype(np.int64, copy=False)
 
-        st_outer, _ = _list_flat(tbl.column("summary_terms"))
-        s_lens_g = pc.list_value_length(st_outer).to_numpy().astype(np.int64)
-        s_terms_g = st_outer.flatten().to_numpy().astype(np.int64)
-        codes_child, _ = _list_flat(tbl.column("summary_codes"))
-        codes_concat, codes_lens = _binary_flat(codes_child)
+        st_outer, _ = kernel.list_flat(tbl.column("summary_terms"))
+        s_terms_g, s_lens_g = kernel.list_flat(st_outer, np.int64)
+        codes_child, _ = kernel.list_flat(tbl.column("summary_codes"))
+        codes_concat, codes_lens = kernel.binary_flat(codes_child)
         if not np.array_equal(codes_lens, s_lens_g):  # one code byte per element
             raise AssertionError("summary codes misaligned with summary terms")
-        mins_flat = _list_flat(tbl.column("summary_min"))[0].to_numpy().astype(
-            np.float32, copy=False
-        )
-        quants_flat = _list_flat(tbl.column("summary_quant"))[0].to_numpy().astype(
-            np.float32, copy=False
-        )
         # identical f32 dequantization to the scan / the oracle
-        s_vals_g = (
-            np.repeat(mins_flat, s_lens_g)
-            + codes_concat.astype(np.float32) * np.repeat(quants_flat, s_lens_g)
-        ).astype(np.float32, copy=False).astype(np.float64)
+        s_vals_g = kernel.dequantize(
+            codes_concat,
+            kernel.list_flat(tbl.column("summary_min"), np.float32)[0],
+            kernel.list_flat(tbl.column("summary_quant"), np.float32)[0],
+            s_lens_g,
+        )
 
         # ---- forward: flat values in storage order + sorted row offsets --
         # hydrated BEFORE the postings regroup so member doc ids can be
@@ -357,10 +294,8 @@ class ServingReplica:
         doc_ids_raw = (
             ftbl.column("doc_id").combine_chunks().to_numpy().astype(np.int64)
         )
-        ft_child, flens = _list_flat(ftbl.column("terms"))
-        fw_child, _ = _list_flat(ftbl.column("weights"))
-        fwd_terms = ft_child.to_numpy().astype(np.int64)
-        fwd_weights = fw_child.to_numpy().astype(np.float64)
+        fwd_terms, flens = kernel.list_flat(ftbl.column("terms"), np.int64)
+        fwd_weights, _ = kernel.list_flat(ftbl.column("weights"), np.float64)
         forder = np.argsort(doc_ids_raw, kind="stable")
         starts_raw = np.cumsum(flens) - flens
         doc_ids_sorted = doc_ids_raw[forder]
@@ -446,9 +381,9 @@ class ServingReplica:
 
     def _resolve(self, terms: list[str], weights: list[float]):
         """Token→id resolution with the engine's semantics: unknown tokens
-        silently dropped (P3), duplicates merged by weight sum over a pinned
-        (term asc, weight asc) element order (search.merge_sorted_terms), ids
-        sorted ascending."""
+        silently dropped (P3), duplicates merged by weight sum over the
+        pinned (term asc, weight asc) order of kernel.merge_sorted_terms,
+        ids sorted ascending."""
         pairs = [
             (self.vocab[t], float(w))
             for t, w in zip(terms, weights)
@@ -456,32 +391,19 @@ class ServingReplica:
         ]
         if not pairs:
             return None
-        # single source of truth for the pinned merge — see
-        # search.merge_sorted_terms' bitwise-identity contract
-        return srch.merge_sorted_terms(
+        return kernel.merge_sorted_terms(
             [p[0] for p in pairs], [p[1] for p in pairs]
         )
 
-    def _score_docs(
-        self, qt: np.ndarray, qw: np.ndarray, pos: np.ndarray
-    ) -> np.ndarray:
+    def _score_docs(self, qweights, pos: np.ndarray) -> np.ndarray:
         """Exact dot of the FULL query vector vs each doc's forward row —
-        the per-row math of search.exact_score (gather + segment_sums), so
-        each doc's float is bitwise the executor's.  ``pos`` is forward
-        POSITIONS (see TermPostings.m_pos) — a direct index, no per-call
-        searchsorted over the corpus id array.  When the weight LUT is
-        active, batch_search has already scattered THIS query's weights
-        into it (same value as the searchsorted gather)."""
-        starts = self.fwd_starts[pos]
-        lens = self.fwd_lens[pos]
-        flat = _flat_slices(starts, lens)
-        if self._qw_lut is not None:
-            qw_elem = self._qw_lut[self.fwd_terms[flat]]
-        else:
-            qw_elem = _gather_qw(qt, qw, self.fwd_terms[flat])
-        contrib = qw_elem * self.fwd_weights[flat]
-        offsets = np.cumsum(lens) - lens
-        return codec.segment_sums(contrib, offsets, lens)
+        kernel.score_rows, so each doc's float is bitwise the executor's.
+        ``pos`` is forward POSITIONS (see TermPostings.m_pos) — a direct
+        index, no per-call searchsorted over the corpus id array."""
+        return kernel.score_rows(
+            self.fwd_starts[pos], self.fwd_lens[pos], self.fwd_terms,
+            self.fwd_weights, qweights,
+        )
 
     def _search_resolved(
         self,
@@ -493,104 +415,138 @@ class ServingReplica:
         two_phase: bool,
     ) -> tuple[np.ndarray, np.ndarray] | None:
         """One resolved query (term ids asc, merged weights) → (top-k
-        forward POSITIONS, scores) or None when nothing matches — the exact
-        per-query body `batch_search` always ran (pure refactor, r6 pass 3,
-        so the executor-side κ-NN map can reuse it on already-resolved
-        rows); `self.doc_ids[pos]` maps positions back to doc ids."""
+        forward POSITIONS, scores) or None when nothing matches;
+        `self.doc_ids[pos]` maps positions back to doc ids."""
         # cut_terms: top-query_cut by (weight desc, term_id asc)
         cut_order = np.lexsort((qt, -qw))[:query_cut]
         matched = [
-            (int(qt[i]), float(qw[i]), self.postings[int(qt[i])])
+            (float(qw[i]), self.postings[int(qt[i])])
             for i in cut_order
             if int(qt[i]) in self.postings
         ]
         if not matched:
             return None
-        if self._qw_lut is not None:
-            # scatter this query's weights (zeroed again at every exit)
-            self._qw_lut[qt] = qw
+        lut = self._qw_lut
+        if lut is None:
+            def qweights(t, _offsets=None):
+                return kernel.gather_qw(qt, qw, t)
+        else:
+            # per-query dense weight table (r6, VERDICT #4): scatter THIS
+            # query's weights, gather by id, zero them again on exit — the
+            # same value as the searchsorted gather
+            def qweights(t, _offsets=None):
+                return lut[t]
 
+            lut[qt] = qw
+        try:
+            return self._search_matched(
+                matched, qweights, k, heap_factor, two_phase
+            )
+        finally:
+            if lut is not None:
+                lut[qt] = 0.0
+
+    def _search_matched(self, matched, qweights, k, heap_factor, two_phase):
+        """Block UBs → θ (phase 0, optional phase 1) → skip → candidate
+        rescore → top-k over the cut terms' ``(qw_t, TermPostings)`` list;
+        ``qweights`` is this query's per-element weight gather."""
+        tps = [tp for _, tp in matched]
+        nbs = np.array([tp.bmax.size for tp in tps], dtype=np.int64)
         # per-block summary UBs + block-max lbs — ONE concatenated
         # gather + segment-sums call across every matched term (r6,
         # VERDICT #4: the per-term loop was Python-call-bound at ~10
-        # terms/query).  Per-block segments are unchanged by the
-        # concatenation and segment_sums is a pure function of each
-        # segment, so every ub float is bitwise identical to the
-        # per-term formulation.
-        theta = -np.inf
-        if len(matched) == 1:
-            tp0 = matched[0][2]
-            st_cat, sv_cat = tp0.s_terms, tp0.s_vals
-            starts_cat, lens_cat = tp0.s_starts, tp0.s_lens
+        # terms/query); segment_sums is a pure function of each segment,
+        # so every ub float is bitwise the per-term one.
+        if len(tps) == 1:
+            st_cat, sv_cat = tps[0].s_terms, tps[0].s_vals
+            starts_cat, lens_cat = tps[0].s_starts, tps[0].s_lens
         else:
-            st_cat = np.concatenate([tp.s_terms for _, _, tp in matched])
-            sv_cat = np.concatenate([tp.s_vals for _, _, tp in matched])
-            lens_cat = np.concatenate([tp.s_lens for _, _, tp in matched])
+            st_cat = np.concatenate([tp.s_terms for tp in tps])
+            sv_cat = np.concatenate([tp.s_vals for tp in tps])
+            lens_cat = np.concatenate([tp.s_lens for tp in tps])
             starts_cat = np.cumsum(lens_cat) - lens_cat
-        if self._qw_lut is not None:
-            qw_st = self._qw_lut[st_cat]
-        else:
-            qw_st = _gather_qw(qt, qw, st_cat)
-        ub_cat = codec.segment_sums(
-            qw_st * sv_cat, starts_cat, lens_cat
-        )
-        ubs_per_term: list[np.ndarray] = []
-        off = 0
-        for _tid, qw_t, tp in matched:
-            nb = tp.bmax.size
-            ubs_per_term.append(ub_cat[off:off + nb])
-            off += nb
-            lb = qw_t * tp.bmax
-            if lb.size >= k:
-                kth = float(np.partition(lb, lb.size - k)[lb.size - k])
-                if kth > theta:
-                    theta = kth
+        ub_cat = codec.segment_sums(qweights(st_cat) * sv_cat, starts_cat, lens_cat)
+        theta = -np.inf
+        if nbs.max() >= k:  # only a list of ≥ k blocks witnesses a θ
+            lb_cat = np.concatenate([qw_t * tp.bmax for qw_t, tp in matched])
+            theta = kernel.theta0(
+                np.zeros(lb_cat.size, dtype=np.int64),
+                np.repeat(np.arange(len(tps)), nbs), lb_cat, k, 1,
+            )[0]
+        b_off = np.cumsum(nbs) - nbs
 
         if two_phase:
             # phase 1: best-UB block per matched list (first argmax =
             # lowest (salt, block), matching the engine's tie order),
             # exact-score the union, k-th best tightens θ
             p1_parts = []
-            for (_tid, _qw_t, tp), ub in zip(matched, ubs_per_term):
-                if ub.size == 0:
-                    continue
-                bi = int(np.argmax(ub))
-                s, n = tp.m_starts[bi], tp.m_lens[bi]
-                p1_parts.append(tp.m_pos[s:s + n])
+            for tp, b0, nb in zip(tps, b_off, nbs):
+                if nb:
+                    bi = int(np.argmax(ub_cat[b0:b0 + nb]))
+                    s, n = tp.m_starts[bi], tp.m_lens[bi]
+                    p1_parts.append(tp.m_pos[s:s + n])
             if p1_parts:
                 p1_docs = np.unique(np.concatenate(p1_parts))
-                scores = self._score_docs(qt, qw, p1_docs)
+                scores = self._score_docs(qweights, p1_docs)
                 if scores.size >= k:
-                    kth = float(
-                        np.partition(scores, scores.size - k)[scores.size - k]
-                    )
-                    if kth > theta:
-                        theta = kth
+                    kth = np.partition(scores, scores.size - k)[scores.size - k]
+                    theta = max(theta, float(kth))
 
+        keep_cat = kernel.keep_blocks(ub_cat, theta, heap_factor)
         cand_parts = []
-        for (_tid, _qw_t, tp), ub in zip(matched, ubs_per_term):
-            keep = (
-                ub >= heap_factor * theta
-                if theta != -np.inf
-                else np.ones(ub.size, dtype=bool)
-            )
-            if not keep.any():
-                continue
-            flat = _flat_slices(tp.m_starts[keep], tp.m_lens[keep])
-            cand_parts.append(tp.m_pos[flat])
+        for tp, b0, nb in zip(tps, b_off, nbs):
+            keep = keep_cat[b0:b0 + nb]
+            if keep.all():  # every block survives: all of the list's docs
+                cand_parts.append(tp.m_pos)
+            elif keep.any():
+                flat = kernel.flat_slices(tp.m_starts[keep], tp.m_lens[keep])
+                cand_parts.append(tp.m_pos[flat])
         if not cand_parts:
-            if self._qw_lut is not None:
-                self._qw_lut[qt] = 0.0
             return None
         # positions are a monotone bijection of the doc ids, so the
         # unique/dedup set and the (score desc, doc asc) tie order are
         # exactly the id formulation's; only the k winners map back
         cands = np.unique(np.concatenate(cand_parts))
-        scores = self._score_docs(qt, qw, cands)
+        scores = self._score_docs(qweights, cands)
         top = np.lexsort((cands, -scores))[:k]
-        if self._qw_lut is not None:
-            self._qw_lut[qt] = 0.0
         return cands[top], scores[top]
+
+    def _search_many(
+        self, resolved, k: int, query_cut: int, heap_factor: float, two_phase: bool
+    ) -> pd.DataFrame:
+        """(query_id, term ids asc, merged weights) triples → the
+        (query_id, rank, doc_id, score) frame; queries matching nothing
+        contribute no rows."""
+        out_qid: list[str] = []
+        out_rank: list[np.ndarray] = []
+        out_doc: list[np.ndarray] = []
+        out_score: list[np.ndarray] = []
+        for qid, qt, qw in resolved:
+            hit = self._search_resolved(qt, qw, k, query_cut, heap_factor, two_phase)
+            if hit is None:
+                continue
+            pos_top, score_top = hit
+            out_qid.extend([qid] * pos_top.size)
+            out_rank.append(np.arange(1, pos_top.size + 1, dtype=np.int32))
+            out_doc.append(self.doc_ids[pos_top])
+            out_score.append(score_top)
+        if not out_qid:
+            return pd.DataFrame(
+                {
+                    "query_id": pd.Series([], dtype=str),
+                    "rank": pd.Series([], dtype=np.int32),
+                    "doc_id": pd.Series([], dtype=np.int64),
+                    "score": pd.Series([], dtype=np.float64),
+                }
+            )
+        return pd.DataFrame(
+            {
+                "query_id": out_qid,
+                "rank": np.concatenate(out_rank),
+                "doc_id": np.concatenate(out_doc),
+                "score": np.concatenate(out_score),
+            }
+        )
 
     def batch_search(
         self,
@@ -617,10 +573,6 @@ class ServingReplica:
                 or not self.config.quant_ceil
                 or heap_factor < 1.0
             )
-        out_qid: list[str] = []
-        out_rank: list[np.ndarray] = []
-        out_doc: list[np.ndarray] = []
-        out_score: list[np.ndarray] = []
         # The engine keys resolution on query_id (search.resolve_queries
         # `by_q`), so a batch repeating a qid is ONE merged query there —
         # concatenate repeated-qid tuples before resolving to match.
@@ -629,38 +581,12 @@ class ServingReplica:
             acc = merged.setdefault(qid, ([], []))
             acc[0].extend(terms)
             acc[1].extend(weights)
-        for qid, (terms, weights) in merged.items():
-            resolved = self._resolve(terms, weights)
-            if resolved is None:
-                continue
-            qt, qw = resolved
-            hit = self._search_resolved(qt, qw, k, query_cut, heap_factor,
-                                        two_phase)
-            if hit is None:
-                continue
-            pos_top, score_top = hit
-            out_qid.extend([qid] * pos_top.size)
-            out_rank.append(np.arange(1, pos_top.size + 1, dtype=np.int32))
-            out_doc.append(self.doc_ids[pos_top])
-            out_score.append(score_top)
-
-        if not out_qid:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=str),
-                    "rank": pd.Series([], dtype=np.int32),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "score": pd.Series([], dtype=np.float64),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_qid,
-                "rank": np.concatenate(out_rank),
-                "doc_id": np.concatenate(out_doc),
-                "score": np.concatenate(out_score),
-            }
+        resolved = (
+            (qid, *r)
+            for qid, (terms, weights) in merged.items()
+            if (r := self._resolve(terms, weights)) is not None
         )
+        return self._search_many(resolved, k, query_cut, heap_factor, two_phase)
 
     def search(
         self,

@@ -63,7 +63,7 @@ def test_unknown_and_empty_queries(tiny_index):
     assert got == []
 
 
-def test_prepare_serving_identical_results(spark):
+def test_prepare_serving_identical_results(spark, monkeypatch):
     """prepare_serving (pinned, doc_id-partitioned forward) must be a pure
     physical optimization: same results, and the rescore plan reads the
     in-memory relation instead of re-scanning storage."""
@@ -87,22 +87,19 @@ def test_prepare_serving_identical_results(spark):
     assert after == before and after
     # the InMemoryTableScan claim is about the DISTRIBUTED rescore join —
     # the r6 driver-CSR fast path answers gated-small batches locally
-    # (LocalTableScan result), so pin the plan shape with it disabled
-    import os
+    # (LocalTableScan result), so pin the plan shape with its budget at 0
+    from seismic_spark import search as srch
 
-    os.environ["SEISMIC_LOCAL_SCORE"] = "0"
-    try:
-        res_dist = idx.batch_search(q, k=5, heap_factor=1.0)
-        dist = [
-            (r.rank, r.doc_id, round(r.score, 10))
-            for r in res_dist.collect()
-        ]
-        assert dist == before
-        assert "InMemoryTableScan" in (
-            res_dist._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        os.environ.pop("SEISMIC_LOCAL_SCORE", None)
+    monkeypatch.setattr(srch, "_LOCAL_SCORE_MAX_BYTES", 0)
+    res_dist = idx.batch_search(q, k=5, heap_factor=1.0)
+    dist = [
+        (r.rank, r.doc_id, round(r.score, 10))
+        for r in res_dist.collect()
+    ]
+    assert dist == before
+    assert "InMemoryTableScan" in (
+        res_dist._jdf.queryExecution().executedPlan().toString()
+    )
     idx.unpersist_serving()
 
 

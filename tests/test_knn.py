@@ -21,7 +21,7 @@ def small_index(spark):
 
 
 def test_build_knn_shape_and_no_self(small_index):
-    knn = small_index.build_knn(nknn=4, batch_size=10)
+    knn = small_index.build_knn(nknn=4)
     rows = knn.collect()
     assert len(rows) == 30
     for r in rows:
@@ -33,7 +33,7 @@ def test_build_knn_shape_and_no_self(small_index):
 
 
 def test_knn_save_load_truncation(small_index, tmp_path, spark):
-    knn = small_index.build_knn(nknn=4, batch_size=10)
+    knn = small_index.build_knn(nknn=4)
     knn_mod.save_knn(knn, str(tmp_path))
     re2 = knn_mod.load_knn(spark, str(tmp_path), nknn=2)
     assert re2.agg(F.max(F.size("neighbors"))).collect()[0][0] <= 2
@@ -42,7 +42,7 @@ def test_knn_save_load_truncation(small_index, tmp_path, spark):
 def test_refinement_monotone(small_index):
     """Refined results are never worse: scores of the final top-k dominate
     the unrefined top-k (refinement only adds candidates)."""
-    small_index.build_knn(nknn=4, batch_size=10)
+    small_index.build_knn(nknn=4)
     queries = [("q0", ["w1", "w2", "shared0"], [1.0, 1.0, 0.5])]
     base = small_index.batch_search(queries, k=5).collect()
     ref = small_index.batch_search_knn(queries, k=5, n_knn=4).collect()

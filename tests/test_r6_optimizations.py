@@ -3,6 +3,8 @@ formulation it replaced (results must be identical, not just close):
 
 - fused θ/decode/dedup tail (search._fused_candidates) vs the windowed
   _theta_survivors → _decode_docs → distinct chain;
+- the κ-NN replica map vs the in-plan fallback, and the replica broadcast's
+  release;
 - narrow per-row cut_terms vs the explode → groupBy → window formulation;
 - topk_per_term's adaptive first-level skip (output-invariant by
   construction — asserted on data where the condition flips it off);
@@ -16,6 +18,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from seismic_spark import kernel
+from seismic_spark import knn as knn_mod
 from seismic_spark import search as srch
 from seismic_spark.index import IndexConfig, SeismicSparkIndex
 from seismic_spark.sources.pages import synth_pages
@@ -156,56 +160,13 @@ def test_minhash_matches_stacked_formulation(spark):
     assert key(new) == key(old)
 
 
-def test_fused_bcast_rescore_matches_join_rescore(spark, idx):
-    """rescore_bcast (broadcast-CSR scoring + per-query top-k inside the
-    fused operator) == the default join-path rescore tail — exact floats,
-    same ranks, on a self-search batch with hf < 1 (knife-edge skips) and
-    approximate summaries."""
-    qdf = idx.forward.select(
-        F.col("doc_id").cast("string").alias("query_id"),
-        F.col("terms").alias("q_terms"),
-        F.col("weights").alias("q_weights"),
-    ).filter(F.size("q_terms") > 0).limit(80)
-    kw = dict(
-        k=5, query_cut=6, heap_factor=0.7, two_phase=False,
-        broadcast_queries=False,
-    )
-    joined = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf, **kw
-    )
-    fused = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf, rescore_bcast=True, **kw
-    )
-    assert _rows(fused) == _rows(joined)
-    assert fused.count() > 0
-
-
-def test_build_knn_bcast_gate_matches_ungated(spark, idx):
-    """knn.build_knn with the broadcast-CSR gate engaged (default) ==
-    gate forced off — the graph is identical either way."""
-    from seismic_spark import knn as knn_mod
-
-    g_on = knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7)
-    old_env = os.environ.get("SEISMIC_KNN_BCAST")
-    os.environ["SEISMIC_KNN_BCAST"] = "0"
-    try:
-        g_off = knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7)
-        key = lambda df: sorted(
-            (r.doc_id, tuple(r.neighbors)) for r in df.collect()
-        )
-        assert key(g_on) == key(g_off)
-    finally:
-        if old_env is None:
-            os.environ.pop("SEISMIC_KNN_BCAST", None)
-        else:
-            os.environ["SEISMIC_KNN_BCAST"] = old_env
-
-
-def test_score_pairs_csr_lut_matches_searchsorted():
-    """The dense-LUT query-weight gather inside _score_pairs_csr == the
-    searchsorted _gather_qw formulation — exact floats, at 1 and 4 threads,
+def test_score_pairs_csr_lut_matches_searchsorted(monkeypatch):
+    """The dense-LUT query-weight gather inside kernel.score_pairs == the
+    searchsorted gather_qw formulation — exact floats, at 1 and 4 threads,
     including empty doc rows, queries absent from q_key, duplicate query
-    terms (pre-repair), and the forced fallback path."""
+    terms (pre-repair), pairs NOT grouped into per-query runs (shuffled qi,
+    which takes the searchsorted gather), and the LUT forced off by a dim
+    cap of 0."""
     rng = np.random.default_rng(11)
     ndocs, nterms, nq = 300, 2500, 40
     f_lens = rng.integers(0, 40, ndocs).astype(np.int64)
@@ -222,63 +183,91 @@ def test_score_pairs_csr_lut_matches_searchsorted():
         t = rng.integers(0, nterms, 9)  # duplicates possible pre-repair
         keys.append(q * (1 << 32) + t)
         ws.append(rng.random(9) * 2)
-    qkey, qw = srch._repair_qkey(
+    qkey, qw = kernel.repair_qkey(
         np.concatenate(keys).astype(np.int64), np.concatenate(ws)
     )
     qi = np.repeat(np.arange(nq + 3), 23)[: nq * 23 + 10]  # some absent qs
     di = rng.integers(0, ndocs, qi.size)
+    shuffled = rng.permutation(qi.size)
 
-    old = os.environ.get("SEISMIC_SCORE_LUT")
-    try:
-        os.environ["SEISMIC_SCORE_LUT"] = "0"
-        base = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=1
+    def score(qi_, di_, threads):
+        return kernel.score_pairs(
+            qi_, di_, f_starts, f_lens, f_t, f_w, qkey, qw, threads=threads
         )
-        os.environ["SEISMIC_SCORE_LUT"] = "1"
-        lut1 = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=1
-        )
-        lut4 = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=4
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SEISMIC_SCORE_LUT", None)
-        else:
-            os.environ["SEISMIC_SCORE_LUT"] = old
+
+    lut1, lut4 = score(qi, di, 1), score(qi, di, 4)
+    shuf = score(qi[shuffled], di[shuffled], 1)
+    monkeypatch.setattr(kernel, "LUT_MAX_DIM", 0)
+    base = score(qi, di, 1)
     assert np.array_equal(base, lut1)
     assert np.array_equal(base, lut4)
+    assert np.array_equal(base[shuffled], shuf)
+    assert np.array_equal(base[shuffled], score(qi[shuffled], di[shuffled], 1))
     assert base.size == qi.size and np.isfinite(base).all()
 
 
-def test_build_knn_replica_matches_join(spark, idx):
-    """The map-only replica self-search path (default under the gate) ==
-    the broadcast-CSR fused path == the ungated join path — identical
-    graphs on real data."""
-    from seismic_spark import knn as knn_mod
+def _graph(df):
+    return sorted((r.doc_id, tuple(r.neighbors)) for r in df.collect())
 
-    key = lambda df: sorted(
-        (r.doc_id, tuple(r.neighbors)) for r in df.collect()
-    )
-    saved = {
-        k: os.environ.get(k) for k in ("SEISMIC_KNN_REPLICA", "SEISMIC_KNN_BCAST")
-    }
-    try:
-        os.environ["SEISMIC_KNN_REPLICA"] = "1"
-        g_rep = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-        os.environ["SEISMIC_KNN_REPLICA"] = "0"
-        os.environ["SEISMIC_KNN_BCAST"] = "1"
-        g_bc = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-        os.environ["SEISMIC_KNN_BCAST"] = "0"
-        g_join = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
-    assert g_rep == g_bc == g_join
+
+def test_build_knn_replica_matches_join(spark, idx, monkeypatch):
+    """The map-only replica self-search (default under the budget) == the
+    in-plan join path (budget forced to 0) — identical graphs on real
+    data."""
+    kw = dict(nknn=4, query_cut=6, heap_factor=0.7)
+    g_rep = _graph(knn_mod.build_knn(idx, **kw))
+    monkeypatch.setattr(knn_mod, "_KNN_BCAST_MAX_BYTES", 0)
+    g_join = _graph(knn_mod.build_knn(idx, **kw))
+    assert g_rep == g_join
     assert len(g_rep) > 0
+
+
+def test_build_knn_budget_falls_back_to_join(spark, idx, monkeypatch):
+    """The κ-NN gate compares the index's true byte count (space_usage) to
+    the budget: at exactly the index size the replica map runs; one byte
+    below it build_knn falls back to the in-plan join path and returns the
+    same graph instead of raising."""
+    total = idx.space_usage()["total"]
+    kw = dict(nknn=4, query_cut=6, heap_factor=0.7)
+    calls = []
+    real = knn_mod._replica_self_search
+    monkeypatch.setattr(
+        knn_mod, "_replica_self_search",
+        lambda *a, **k: calls.append(1) or real(*a, **k),
+    )
+    monkeypatch.setattr(knn_mod, "_KNN_BCAST_MAX_BYTES", total)
+    g_rep = _graph(knn_mod.build_knn(idx, **kw))
+    assert calls == [1]
+    monkeypatch.setattr(knn_mod, "_KNN_BCAST_MAX_BYTES", total - 1)
+    g_join = _graph(knn_mod.build_knn(idx, **kw))
+    assert calls == [1]  # replica not used above the budget
+    assert g_join == g_rep and g_rep
+
+
+def test_build_knn_releases_previous_broadcast(spark, idx, monkeypatch):
+    """Each build_knn releases the previous graph's replica broadcast, so
+    two calls leave exactly one live handle; unpersist_serving releases
+    that one too."""
+    from pyspark import Broadcast
+
+    released = []
+    real_unpersist = Broadcast.unpersist
+
+    def unpersist(self, blocking=False):
+        released.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    idx._release_knn_broadcast()
+    kw = dict(nknn=4, query_cut=6, heap_factor=0.7)
+    knn_mod.build_knn(idx, **kw).count()
+    first = idx._knn_bcast
+    knn_mod.build_knn(idx, **kw).count()
+    second = idx._knn_bcast
+    assert first is not None and second is not None and first is not second
+    assert released == [first]  # exactly one live handle: the second
+    idx.unpersist_serving()
+    assert released == [first, second] and idx._knn_bcast is None
 
 
 def test_serving_replica_pickle_roundtrip(spark, idx):

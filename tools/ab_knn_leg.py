@@ -1,7 +1,7 @@
 """One fresh-process leg for interleaved knn A/B: builds the geometric index
 and runs the knn graph job N times, printing one JSON line with the times and
-canary brackets.  Env: SEISMIC_SCORE_LUT / SEISMIC_MALLOC_TUNE etc. are read
-by the session this leg starts, so sides differ only by env.
+canary brackets.  Env: SEISMIC_MALLOC_TUNE etc. are read by the session
+this leg starts, so sides differ only by env.
 
 Usage: python tools/ab_knn_leg.py [--reps 3]
 """
@@ -60,7 +60,6 @@ def main() -> None:
     post = measure()
     spark.stop()
     print(json.dumps({
-        "lut": os.environ.get("SEISMIC_SCORE_LUT", "1"),
         "mtune": os.environ.get("SEISMIC_MALLOC_TUNE", "1"),
         "build_s": build_s, "knn_times": times, "n": n,
         "canary_pre": pre["first_touch_mbps"],

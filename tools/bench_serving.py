@@ -3,15 +3,10 @@
 The r4 per-stage profile put the remaining interactive floor at
 ubs-scan+collect 1.8-1.9 s, phase-1 rescore 1.0-1.2 s, final rescore
 0.9-1.4 s per batch-10 search on a 1M-doc index — two real scan jobs, not
-scheduling.  This harness measures the two remaining scan-side levers in a
-SAME-WINDOW INTERLEAVED design (every rep runs every variant back-to-back,
-so host drift cannot favor a side):
+scheduling.  This harness measures a scan-side lever in a SAME-WINDOW
+INTERLEAVED design (every rep runs every variant back-to-back, so host
+drift cannot favor a side):
 
-- ``defer``  — the env-gated deferred-gaps fast path
-  (search._FASTPATH_DEFER_GAPS): the block-UB scan reads NO doc_gaps column
-  (Parquet column pruning, nothing persisted); gaps are re-fetched for
-  SURVIVING blocks only.  Trades the ubs persist + wide scan for one extra
-  narrow scan job.
 - ``compact`` — a serving snapshot of the postings table rewritten as a few
   term-RANGE-sorted parquet files (repartitionByRange(8, term_id) +
   sortWithinPartitions): the per-batch UB scan schedules ~8 tasks instead
@@ -21,9 +16,11 @@ so host drift cannot favor a side):
   experiment, which measured SLOWER than re-scanning tmpfs parquet
   (index.py prepare_serving docstring).
 
-Variants: base / defer / compact / compact+defer, batch sizes 10/100/1000
-(1000 exercises the in-plan path — compact applies there too, defer does
-not).  Canary protocol: pre/post brackets + 30 s watcher.
+Variants: base / compact, batch sizes 10/100/1000 (1000 exercises the
+in-plan path — compact applies there too).  The deferred-gaps variant
+measured here in round 5 lost every cell (BENCH/serving_r5.json) and was
+deleted from the engine.  Canary protocol: pre/post brackets + 30 s
+watcher.
 
 Usage: python tools/bench_serving.py [--docs 1000000] [--cores 16]
        [--sizes 10,100,1000] [--reps 3] [--out /tmp/serving.json]
@@ -104,28 +101,23 @@ qvecs_all = srch.resolve_queries(spark, qs_all, idx.vocab)
 qids = [q[0] for q in qs_all]
 
 variants = [
-    ("base",          idx.postings,     False),
-    ("defer",         idx.postings,     True),
-    ("compact",       postings_compact, False),
-    ("compact_defer", postings_compact, True),
+    ("base",    idx.postings),
+    ("compact", postings_compact),
 ]
-regs = {name: [] for name, _, _ in variants}
+regs = {name: [] for name, _ in variants}
 
 # warm every variant once, untimed (python workers, parquet footers)
 warm = {q: qvecs_all[q] for q in qids[:5] if q in qvecs_all}
-for name, p, d in variants:
-    srch._FASTPATH_DEFER_GAPS = d
+for name, p in variants:
     srch.batch_search(spark, p, idx.forward, warm, k=10, query_cut=10,
                       heap_factor=0.8, two_phase=True,
                       cache_registry=regs[name]).count()
-srch._FASTPATH_DEFER_GAPS = False
 
 out = []
 for b in sizes:
     qs = {q: qvecs_all[q] for q in qids[:b] if q in qvecs_all}
     for rep in range(reps):
-        for name, p, d in variants:          # interleaved: ABCD ABCD ...
-            srch._FASTPATH_DEFER_GAPS = d
+        for name, p in variants:             # interleaved: AB AB ...
             t0 = time.time()
             srch.batch_search(spark, p, idx.forward, qs, k=10,
                               query_cut=10, heap_factor=0.8, two_phase=True,
@@ -133,7 +125,6 @@ for b in sizes:
             sec = round(time.time() - t0, 2)
             out.append({"batch": b, "variant": name, "rep": rep, "sec": sec})
             print("ROW " + json.dumps(out[-1]), flush=True)
-srch._FASTPATH_DEFER_GAPS = False
 
 spark.stop()
 print("RESULT " + json.dumps({
