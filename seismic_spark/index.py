@@ -625,20 +625,11 @@ class SeismicSparkIndex:
         heap_factor: float = 1.0,
         n_knn: int = 5,
     ) -> DataFrame:
-        """Q7: dynamically-pruned search + κ-NN neighbor refinement."""
-        from seismic_spark import knn as knn_mod
-
-        if getattr(self, "knn", None) is None:
-            raise ValueError("call build_knn() first")
-        qvecs = srch.resolve_queries(
-            self.spark, queries, self.vocab, cache=self._csr_cache
+        """Q7: dynamically-pruned search + κ-NN neighbor refinement — the
+        one-phase :meth:`batch_search` with ``n_knn``."""
+        return self.batch_search(
+            queries, k, query_cut, heap_factor, two_phase=False, n_knn=n_knn
         )
-        base = srch.batch_search(
-            self.spark, self.postings, self.forward, qvecs,
-            k=k, query_cut=query_cut, heap_factor=heap_factor,
-            cache_registry=self._ubs_caches,
-        )
-        return knn_mod.refine(base, self.knn, self.forward, qvecs, k=k, n_knn=n_knn)
 
     # -------------------------------------------------------- conversion ----
 

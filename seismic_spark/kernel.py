@@ -227,6 +227,40 @@ def keep_blocks(ub: np.ndarray, theta, heap_factor: float) -> np.ndarray:
     return keep
 
 
+def best_blocks(
+    q_of: np.ndarray,
+    term: np.ndarray,
+    ub: np.ndarray,
+    salt: np.ndarray,
+    block: np.ndarray,
+) -> np.ndarray:
+    """Index of each (query, term) list's best block — first by (ub desc,
+    salt asc, block asc), a total order within a list — the block phase 1
+    exact-scores (first_sorted, posting_list.rs:149-185)."""
+    order = np.lexsort((block, salt, -ub, term, q_of))
+    return order[segment_starts(q_of[order], term[order])]
+
+
+def keep_mask(
+    q_of: np.ndarray,
+    term: np.ndarray,
+    lb: np.ndarray,
+    ub: np.ndarray,
+    k: int,
+    nq: int,
+    heap_factor: float,
+    theta2: np.ndarray | None = None,
+) -> np.ndarray:
+    """Survivor mask over block rows of ``nq`` queries: θ = max(
+    :func:`theta0`, ``theta2``) per query, then :func:`keep_blocks`.
+    ``theta2`` (f64[nq], two_phase) is each query's k-th best phase-1 exact
+    score; NaN or -inf where phase 1 scored fewer than k docs."""
+    theta = theta0(q_of, term, lb, k, nq)
+    if theta2 is not None:
+        theta = np.fmax(theta, theta2)
+    return keep_blocks(ub, theta[q_of], heap_factor)
+
+
 # ------------------------------------------------------- decode + dedup ----
 
 

@@ -38,6 +38,11 @@ import os
 _M_TRIM_THRESHOLD = -1
 _M_MMAP_THRESHOLD = -3
 
+# the policy values (see the module docstring)
+MMAP_THRESHOLD = 256 << 20
+TRIM_THRESHOLD = 2**31 - 1
+JEMALLOC_DECAY_MS = -1
+
 _applied = False
 
 
@@ -51,23 +56,15 @@ def tune_process_allocators() -> None:
         import ctypes
 
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(
-            _M_MMAP_THRESHOLD,
-            int(os.environ.get("SEISMIC_MALLOC_MMAP_THRESHOLD", str(256 << 20))),
-        )
-        libc.mallopt(
-            _M_TRIM_THRESHOLD,
-            int(os.environ.get("SEISMIC_MALLOC_TRIM_THRESHOLD", str(2**31 - 1))),
-        )
+        libc.mallopt(_M_MMAP_THRESHOLD, MMAP_THRESHOLD)
+        libc.mallopt(_M_TRIM_THRESHOLD, TRIM_THRESHOLD)
     except Exception:  # non-glibc platform — policy simply stays stock
         pass
     try:
         import pyarrow as pa
 
         if pa.default_memory_pool().backend_name == "jemalloc":
-            pa.jemalloc_set_decay_ms(
-                int(os.environ.get("SEISMIC_JEMALLOC_DECAY_MS", "-1"))
-            )
+            pa.jemalloc_set_decay_ms(JEMALLOC_DECAY_MS)
     except Exception:
         pass
 
@@ -78,11 +75,5 @@ def export_child_env() -> None:
     MALLOC_* env is read by glibc at process startup."""
     if os.environ.get("SEISMIC_MALLOC_TUNE", "1") != "1":
         return
-    os.environ.setdefault(
-        "MALLOC_MMAP_THRESHOLD_",
-        os.environ.get("SEISMIC_MALLOC_MMAP_THRESHOLD", str(256 << 20)),
-    )
-    os.environ.setdefault(
-        "MALLOC_TRIM_THRESHOLD_",
-        os.environ.get("SEISMIC_MALLOC_TRIM_THRESHOLD", str(2**31 - 1)),
-    )
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(MMAP_THRESHOLD))
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(TRIM_THRESHOLD))

@@ -100,6 +100,38 @@ def build(docs: list[tuple[int, str]], cfg: IndexConfig | None = None) -> Oracle
             else:
                 raise ValueError(f"unknown value_type {cfg.value_type!r}")
 
+    return _index(vocab, df, doc_ids, fwd_terms, fwd_weights, cfg)
+
+
+def from_vectors(
+    vocab: dict[str, int],
+    rows: list[tuple[int, list[int], list[float]]],
+    cfg: IndexConfig | None = None,
+) -> OracleIndex:
+    """Oracle index over stored (doc_id, term ids, weights) rows — e.g. an
+    engine forward table — instead of text: the same pruning, blocking and
+    summaries as :func:`build` on exactly the given f64 weights, so the
+    search semantics can be checked with scores compared bitwise."""
+    cfg = cfg or IndexConfig()
+    rows = sorted(rows)
+    doc_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    fwd_terms = [np.asarray(r[1], dtype=np.int64) for r in rows]
+    fwd_weights = [np.asarray(r[2], dtype=np.float64) for r in rows]
+    df = np.zeros(len(vocab), dtype=np.int64)
+    for t in fwd_terms:
+        df[t] += 1
+    return _index(vocab, df, doc_ids, fwd_terms, fwd_weights, cfg)
+
+
+def _index(
+    vocab: dict[str, int],
+    df: np.ndarray,
+    doc_ids: np.ndarray,
+    fwd_terms: list[np.ndarray],
+    fwd_weights: list[np.ndarray],
+    cfg: IndexConfig,
+) -> OracleIndex:
+    """Pruned, blocked, summarized posting lists over a forward index."""
     entries: dict[int, list[tuple[float, int]]] = {}
     for pos, d in enumerate(doc_ids.tolist()):
         tids, ws = fwd_terms[pos], fwd_weights[pos]
@@ -123,7 +155,7 @@ def build(docs: list[tuple[int, str]], cfg: IndexConfig | None = None) -> Oracle
         all_w = np.sort(
             np.asarray([w for lst in entries.values() for w, _ in lst])
         )[::-1]
-        budget = len(terms) * cfg.n_postings
+        budget = len(vocab) * cfg.n_postings
         if all_w.size > budget:
             cut = float(all_w[budget - 1])
         cap = int(cfg.n_postings * cfg.max_fraction)
@@ -185,19 +217,18 @@ def _masked_dot(qt: np.ndarray, qw: np.ndarray, ft: np.ndarray, fv: np.ndarray) 
     )
 
 
-def search(
+def _walk(
     idx: OracleIndex,
     queries: list[tuple[str, list[str], list[float]]],
-    k: int = 10,
-    query_cut: int = 10,
-    heap_factor: float = 1.0,
-    two_phase: bool = False,
-) -> list[tuple[str, int, int, float]]:
-    """Returns [(query_id, rank, doc_id, score)] with the engine's exact
-    candidate-selection, float, and tie-break semantics (incl. the optional
-    phase-1 θ tightening — search.py two_phase)."""
+    k: int,
+    query_cut: int,
+    heap_factor: float,
+    two_phase: bool,
+):
+    """Per resolved query: ``(qid, score_doc, matched, kept)`` — the cut
+    terms' blocks as (ub, block) pairs and the blocks that pass the skip
+    test ``ub >= heap_factor·θ`` — with the engine's θ rule."""
     pos_of = {int(d): i for i, d in enumerate(idx.doc_ids.tolist())}
-    out: list[tuple[str, int, int, float]] = []
     for qid, terms, weights in queries:
         pairs = sorted(
             (idx.vocab[t], float(w)) for t, w in zip(terms, weights) if t in idx.vocab
@@ -209,7 +240,7 @@ def search(
         cut_order = np.argsort(-qw, kind="stable")[:query_cut]
         cut_ts = qt[cut_order]
 
-        def score_doc(d: int) -> float:
+        def score_doc(d: int, qt=qt, qw=qw) -> float:
             i = pos_of[d]
             return _masked_dot(qt, qw, idx.fwd_terms[i], idx.fwd_weights[i])
 
@@ -239,7 +270,7 @@ def search(
         if two_phase and term_blocks:
             # phase 1: best-ub block per matched list (tie: lowest block
             # index — matches the engine's (ub desc, salt asc, block asc)
-            # window since block ids ascend with salt), exact-score the
+            # order since block ids ascend with salt), exact-score the
             # union, k-th best tightens θ.
             p1_docs: set[int] = set()
             for _, ubs, blocks in term_blocks:
@@ -251,18 +282,63 @@ def search(
                 theta2 = p1_scores[k - 1]
                 theta = theta2 if theta is None else max(theta, theta2)
 
-        cands: set[int] = set()
-        for _, ubs, blocks in term_blocks:
-            for ub, b in zip(ubs, blocks):
-                if theta is not None and ub < heap_factor * theta:
-                    continue
-                cands.update(int(x) for x in b["ids"].tolist())
+        matched = [
+            (ub, b) for _, ubs, blocks in term_blocks for ub, b in zip(ubs, blocks)
+        ]
+        kept = [
+            (ub, b) for ub, b in matched
+            if theta is None or ub >= heap_factor * theta
+        ]
+        yield qid, score_doc, matched, kept
 
+
+def search(
+    idx: OracleIndex,
+    queries: list[tuple[str, list[str], list[float]]],
+    k: int = 10,
+    query_cut: int = 10,
+    heap_factor: float = 1.0,
+    two_phase: bool = False,
+) -> list[tuple[str, int, int, float]]:
+    """Returns [(query_id, rank, doc_id, score)] with the engine's exact
+    candidate-selection, float, and tie-break semantics (incl. the optional
+    phase-1 θ tightening — search.py two_phase)."""
+    out: list[tuple[str, int, int, float]] = []
+    for qid, score_doc, _, kept in _walk(
+        idx, queries, k, query_cut, heap_factor, two_phase
+    ):
+        cands = {int(x) for _, b in kept for x in b["ids"].tolist()}
         scored = [(score_doc(d), d) for d in cands]
         scored.sort(key=lambda x: (-x[0], x[1]))
         for r, (s, d) in enumerate(scored[:k], start=1):
             out.append((qid, r, d, s))
     return out
+
+
+def search_stats(
+    idx: OracleIndex,
+    queries: list[tuple[str, list[str], list[float]]],
+    k: int = 10,
+    query_cut: int = 10,
+    heap_factor: float = 1.0,
+    two_phase: bool = False,
+) -> dict[str, int]:
+    """search.search_stats' counts by walking the index: blocks of the cut
+    terms' lists, blocks kept by the skip test, and distinct docs of the
+    kept blocks (summed over queries)."""
+    matched_n = scanned = cands = 0
+    for _, _, matched, kept in _walk(
+        idx, queries, k, query_cut, heap_factor, two_phase
+    ):
+        matched_n += len(matched)
+        scanned += len(kept)
+        cands += len({int(x) for _, b in kept for x in b["ids"].tolist()})
+    return {
+        "blocks_matched": matched_n,
+        "blocks_scanned": scanned,
+        "blocks_skipped": matched_n - scanned,
+        "candidates": cands,
+    }
 
 
 def bruteforce(

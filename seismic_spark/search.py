@@ -18,15 +18,20 @@ ONE Spark job:
   θ_q = max over matched terms of that per-term k-th largest.
 
   Phase-1 tightening (``two_phase=True`` — the first_sorted analogue,
-  posting_list.rs:149-185): exactly score the single best-ub block of every
-  matched list (a bounded candidate set), take the per-query k-th best exact
-  score θ', and use θ_q ← max(θ_q, θ').  Like the reference's evolving heap
-  after the first sorted list, this tightens θ before the main scan — still
-  one logical plan, no driver action.
+  posting_list.rs:149-185): decode the single best-ub block of every
+  matched list (kernel.best_blocks: ub desc, salt asc, block asc), exactly
+  score that bounded candidate set, and take each query's k-th best exact
+  score θ2; θ_q ← max(θ_q, θ2).  Like the reference's evolving heap after
+  the first sorted list, this tightens θ before the main scan — still one
+  logical plan, no driver action: θ2 is one broadcast row per query that
+  joins the block rows before the fused operator.
 
   Blocks with ``summary_ub < heap_factor × θ_q`` are skipped; survivors are
   decoded, deduped across lists (the reference's `visited` set), exactly
-  re-scored against full doc vectors, and top-k'ed per query.
+  re-scored against full doc vectors, and top-k'ed per query.  θ, the skip
+  and decode + dedup run in ONE streamed operator over each query's
+  co-located block rows (_fused_candidates); θ and the skip decision are
+  kernel.keep_mask in every path.
 
 With upper-bound summaries (summary_energy=1.0, quant_ceil) and
 heap_factor=1.0 this is EXACT w.r.t. scanning the cut-term posting lists.
@@ -54,6 +59,7 @@ same code the serving replica and the κ-NN map run.
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Iterator
 
@@ -66,6 +72,8 @@ from seismic_spark import codec, kernel
 from seismic_spark.kernel import QVec, merge_sorted_terms
 
 QUERIES_SCHEMA = "query_id STRING, q_terms ARRAY<INT>, q_weights ARRAY<DOUBLE>"
+
+log = logging.getLogger(__name__)
 
 # driver-side vocab map gate for resolve_queries (strings + ids; ~60 MB at
 # the 1M default) — over it, token resolution stays a per-batch join
@@ -384,49 +392,14 @@ def _forward_csr(forward: DataFrame, csr_cache: dict | None):
     return fwd_csr
 
 
-def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
-    """θ derivation + skip filter + gap decode + cross-list dedup in ONE
-    streamed operator — the two_phase=False tail of the in-plan path.
-
-    Replaces the window-based `_theta_survivors` → `_decode_docs` →
-    `.distinct()` chain (3 exchanges, two of them sorting the gap-blob-laden
-    ubs rows) with a single repartition("query_id") — guide §2.4 (remove
-    shuffles outright) + §2.3 (don't move heavy payloads through exchanges
-    they don't need): the gap blobs cross exactly one exchange, and the θ
-    aggregation/filter/decode/dedup all happen in one vectorized pass over
-    each query's co-located block rows.
-
-    Value-parity with the windowed derivation (and the driver fast path):
-    θ and the skip predicate are :func:`kernel.theta0` /
-    :func:`kernel.keep_blocks`, the same values the `wt` window's
-    row_number()==k row and the filter select, so the surviving block set —
-    and every downstream score — is bitwise identical (test_parity_r4/r5
-    pin this against the fast path).  Queries with NO term reaching k
-    blocks keep all their blocks (the windowed path's `theta IS NULL` arm).
-    Dedup is per query group, which equals the old global `.distinct()`
-    because one query's rows are fully co-located.
-    """
-
-    def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        qids = pdf["query_id"].to_numpy()
-        starts = kernel.segment_starts(qids)
-        q_of = np.cumsum(starts) - 1
-        theta = kernel.theta0(
-            q_of,
-            pdf["term_id"].to_numpy(dtype=np.int64),
-            pdf["lb"].to_numpy(dtype=np.float64),
-            k,
-            int(q_of[-1]) + 1,
-        )
-        kept = np.flatnonzero(
-            kernel.keep_blocks(
-                pdf["ub"].to_numpy(dtype=np.float64), theta[q_of], heap_factor
-            )
-        )
-        if kept.size == 0:
-            return None
-        qs, ds = kernel.decode_dedup(q_of[kept], pdf["gaps"].to_numpy()[kept])
-        return pd.DataFrame({"query_id": qids[starts][qs], "doc_id": ds})
+def _per_query(
+    frame: DataFrame, process, schema: str = "query_id STRING, doc_id BIGINT"
+) -> DataFrame:
+    """Run ``process`` over complete, co-located query groups of block rows
+    — one repartition("query_id") + in-partition sort, then a streamed
+    ``mapInPandas`` that carries a query split across Arrow batches into
+    the next call.  ``process(pdf)`` gets whole queries' rows sorted by
+    query_id and returns a ``schema`` frame or None."""
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -449,39 +422,125 @@ def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
             if out is not None:
                 yield out
 
-    parted = (
-        ubs.select("query_id", "term_id", "ub", "lb", "gaps")
-        .repartition("query_id")
-        .sortWithinPartitions("query_id")
-    )
-    return parted.mapInPandas(gen, "query_id STRING, doc_id BIGINT")
+    parted = frame.repartition("query_id").sortWithinPartitions("query_id")
+    return parted.mapInPandas(gen, schema)
+
+
+def _query_codes(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(query ids, first-row mask, per-row query code) of query-sorted rows."""
+    qids = pdf["query_id"].to_numpy()
+    starts = kernel.segment_starts(qids)
+    return qids[starts], starts, np.cumsum(starts) - 1
+
+
+def _decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Whole queries' (query_id, gaps) block rows → their distinct
+    (query_id, doc_id) candidates."""
+    uq, qs, ds = _decode_rows(pdf)
+    return pd.DataFrame({"query_id": uq[qs], "doc_id": ds})
 
 
 def _decode_docs(block_rows: DataFrame) -> DataFrame:
     """(query_id, gaps) → distinct (query_id, doc_id) candidates (the
-    reference's cross-list `visited` dedup, posting_list.rs:206-214).
+    reference's cross-list `visited` dedup, posting_list.rs:206-214): one
+    vectorized continuation-bit decode per batch of co-located queries."""
+    return _per_query(block_rows.select("query_id", "gaps"), _decode_group)
 
-    One vectorized continuation-bit pass decodes ALL gap buffers of an Arrow
-    batch (codec.delta_decode_multi) — no per-row Python on the query path.
+
+def _phase1_candidates(ubs: DataFrame) -> DataFrame:
+    """two_phase's phase-1 candidates: the docs of every matched list's
+    best-ub block (:func:`kernel.best_blocks`), deduped per query."""
+
+    def process(pdf: pd.DataFrame) -> pd.DataFrame:
+        _, _, q_of = _query_codes(pdf)
+        best = kernel.best_blocks(
+            q_of,
+            pdf["term_id"].to_numpy(dtype=np.int64),
+            pdf["ub"].to_numpy(dtype=np.float64),
+            pdf["salt"].to_numpy(dtype=np.int64),
+            pdf["block"].to_numpy(dtype=np.int64),
+        )
+        return _decode_group(pdf.iloc[best])
+
+    cols = ["query_id", "term_id", "salt", "block", "ub", "gaps"]
+    return _per_query(ubs.select(*cols), process)
+
+
+def _with_theta2(
+    ubs: DataFrame, forward: DataFrame, qdf: DataFrame, k: int,
+    broadcast_queries: bool, cache_registry: list[DataFrame],
+) -> DataFrame:
+    """ubs plus a ``theta2`` column: each query's k-th best exact phase-1
+    score (null where phase 1 found fewer than k docs) — the first_sorted
+    tightening :func:`_fused_candidates` maxes into θ.  One row per query,
+    always broadcast (AQE has no stats for a Python UDF's output).  Phase 1
+    and the fused tail both read the block scan, so ``ubs`` is persisted
+    (once, not per consumer) and appended to ``cache_registry``."""
+    ubs = ubs.persist()
+    cache_registry.append(ubs)
+    p1 = exact_score(
+        _phase1_candidates(ubs), forward, qdf, broadcast_queries=broadcast_queries
+    )
+    theta2 = (
+        topk(p1, k)
+        .filter(F.col("rank") == k)
+        .select("query_id", F.col("score").alias("theta2"))
+    )
+    return ubs.join(F.broadcast(theta2), "query_id", "left")
+
+
+def _fused_keep(pdf: pd.DataFrame, k: int, heap_factor: float) -> np.ndarray:
+    """The in-plan θ + skip decision over whole queries' block rows:
+    :func:`kernel.keep_mask` over their f64 ub/lb, maxed with the
+    ``theta2`` column (null → NaN) when :func:`_with_theta2` added it.
+    Returns the surviving row indices."""
+    uq, starts, q_of = _query_codes(pdf)
+    theta2 = None
+    if "theta2" in pdf:
+        theta2 = pdf["theta2"].to_numpy(dtype=np.float64)[starts]
+    return np.flatnonzero(
+        kernel.keep_mask(
+            q_of,
+            pdf["term_id"].to_numpy(dtype=np.int64),
+            pdf["lb"].to_numpy(dtype=np.float64),
+            pdf["ub"].to_numpy(dtype=np.float64),
+            k,
+            uq.size,
+            heap_factor,
+            theta2,
+        )
+    )
+
+
+def _fused_input(ubs: DataFrame) -> DataFrame:
+    """The block-row columns :func:`_fused_keep` and the decode read."""
+    cols = ("query_id", "term_id", "ub", "lb", "gaps", "theta2")
+    return ubs.select(*(c for c in cols if c in ubs.columns))
+
+
+def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
+    """θ derivation + skip filter + gap decode + cross-list dedup in ONE
+    streamed operator — the tail of every in-plan batch, both two_phase
+    settings, dict and DataFrame queries.
+
+    One repartition("query_id") co-locates each query's block rows (guide
+    §2.4: no window/aggregate/distinct chain; §2.3: the gap blobs cross one
+    exchange), and one vectorized pass per batch of whole queries runs θ
+    and the skip predicate (:func:`kernel.keep_mask`, as the driver fast
+    path does; the serving replica runs the same :func:`kernel.theta0` /
+    :func:`kernel.keep_blocks` — the same f64 values and IEEE comparison,
+    so the surviving block set and every downstream score are bitwise
+    identical), then decode + dedup (complete, because a query's rows are
+    co-located).  With two_phase, ``ubs`` carries :func:`_with_theta2`'s
+    column and θ is maxed with it.  Queries with no term reaching k blocks
+    and no phase-1 θ keep all their blocks.
     """
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids, counts = kernel.decode_blocks(pdf["gaps"])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
-                    "doc_id": ids,
-                }
-            )
+    def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        kept = _fused_keep(pdf, k, heap_factor)
+        return _decode_group(pdf.iloc[kept]) if kept.size else None
 
-    return (
-        block_rows.select("query_id", "gaps")
-        .mapInPandas(decode, "query_id STRING, doc_id BIGINT")
-        .distinct()
-    )
+    return _per_query(_fused_input(ubs), process)
 
 
 # ---------------------------------------------------------- batch search ----
@@ -591,8 +650,7 @@ def _compact_rescore(
         # one coalesced partition → a partition-wide dedup is a full dedup
         frames = [pdf for pdf in it if not pdf.empty]
         if frames:
-            uq, qs, ds = _decode_rows(pd.concat(frames, ignore_index=True))
-            yield pd.DataFrame({"query_id": uq[qs], "doc_id": ds})
+            yield _decode_group(pd.concat(frames, ignore_index=True))
 
     cands = (
         block_rows.select("query_id", "gaps")
@@ -701,29 +759,29 @@ def _local_topk(rows: pd.DataFrame, qside, fwd_csr, k: int) -> pd.DataFrame:
 def _driver_keep(
     tbl: pd.DataFrame, k: int, heap_factor: float, p1_kth=None
 ) -> np.ndarray:
-    """Survivor mask over a collected block table: phase-0 θ
-    (:func:`kernel.theta0`), the two_phase tightening when ``p1_kth`` is
-    given, then :func:`kernel.keep_blocks` — the same f64 values and IEEE
-    predicate as the in-plan derivation.
+    """Survivor mask over a collected block table (:func:`kernel.keep_mask`
+    — the same f64 values and IEEE predicate as the in-plan operator).
 
-    ``p1_kth(best_rows)`` exact-scores the best-ub block of every matched
-    list — first by (ub desc, salt asc, block asc), posting_list.rs:149-185
-    — and returns ``(query ids, k-th best score)`` arrays; θ is maxed with
-    them."""
+    ``p1_kth(best_rows)`` (two_phase) exact-scores the best-ub block of
+    every matched list (:func:`kernel.best_blocks`) and returns ``(query
+    ids, k-th best score)`` arrays; θ is maxed with them."""
     uq, q_of = np.unique(tbl["query_id"].to_numpy(), return_inverse=True)
     term = tbl["term_id"].to_numpy(dtype=np.int64)
     ub = tbl["ub"].to_numpy(dtype=np.float64)
-    theta = kernel.theta0(q_of, term, tbl["lb"].to_numpy(dtype=np.float64), k, uq.size)
+    theta2 = None
     if p1_kth is not None:
-        order = np.lexsort(
-            (tbl["block"].to_numpy(), tbl["salt"].to_numpy(), -ub, term, q_of)
+        best = kernel.best_blocks(
+            q_of, term, ub, tbl["salt"].to_numpy(), tbl["block"].to_numpy()
         )
-        best = order[kernel.segment_starts(q_of[order], term[order])]
         qids, kth = p1_kth(tbl.iloc[best])
+        theta2 = np.full(uq.size, -np.inf)
         if len(qids):
             i = np.searchsorted(uq, np.asarray(qids, dtype=object))
-            theta[i] = np.maximum(theta[i], np.asarray(kth, dtype=np.float64))
-    return kernel.keep_blocks(ub, theta[q_of], heap_factor)
+            theta2[i] = np.asarray(kth, dtype=np.float64)
+    return kernel.keep_mask(
+        q_of, term, tbl["lb"].to_numpy(dtype=np.float64), ub, k, uq.size,
+        heap_factor, theta2,
+    )
 
 
 def _driver_theta_local(
@@ -789,12 +847,12 @@ def _driver_theta_search(
 
     Motivation (measured, BENCH/BASELINE.md round-4 batch-size section): the
     in-plan θ derivation is one logical plan but AQE materializes its every
-    tiny shuffle/broadcast stage as a separate job — 17–24 jobs per batch,
-    ~6 s of scheduling fixed cost at any corpus size, which dominates
-    batches under ~1000 queries.  For a driver-side dict the narrow block
-    table (query_id, term_id, salt, block, ub, lb — no gap blobs) is a few
-    hundred rows per query at most, so the θ aggregation that costs several
-    window/aggregate stages in-plan is a microsecond numpy pass locally:
+    tiny shuffle/broadcast stage as a separate job — 17–24 jobs per batch
+    when measured, ~6 s of scheduling fixed cost at any corpus size, which
+    dominates batches under ~1000 queries.  For a driver-side dict the
+    narrow block table (query_id, term_id, salt, block, ub, lb — no gap
+    blobs) is a few hundred rows per query at most, so the θ derivation
+    that costs in-plan exchanges is a microsecond numpy pass locally:
 
       job 1   materialize + cache the block-UB scan, collect narrow columns
       (job 2) two_phase only: exact-score the best-ub block per matched
@@ -816,8 +874,9 @@ def _driver_theta_search(
     identical (tested: test_search_fastpath.py).
 
     DataFrame-scale query sets (κ-NN graph: millions of queries) keep the
-    in-plan windowed derivation — collecting their block table would be a
-    driver bottleneck, which is exactly why the in-plan variant exists.
+    in-plan derivation (:func:`_fused_candidates`) — collecting their block
+    table would be a driver bottleneck, which is exactly why the in-plan
+    variant exists.
 
     Returns None when the narrow block table exceeds
     ``_DRIVER_THETA_MAX_ROWS`` (collected via limit(cap+1), so the transfer
@@ -907,8 +966,8 @@ def retire_caches(cache_registry: list[DataFrame]) -> None:
         df = cache_registry.pop()
         try:
             df.unpersist(blocking=False)
-        except Exception:
-            pass
+        except Exception:  # a stopped session has nothing left to release
+            log.warning("could not unpersist a cached ubs frame", exc_info=True)
 
 
 def batch_search(
@@ -956,6 +1015,13 @@ def batch_search(
     (:func:`_driver_theta_local`) — result-identical, one Spark job per
     batch.  The CALLER must gate on forward size (see
     ``_LOCAL_SCORE_MAX_BYTES`` and SeismicSparkIndex.batch_search).
+
+    Every other batch — DataFrame queries, dict batches over the fast-path
+    gates, both two_phase settings — runs the in-plan tail: block-UB scan
+    → (two_phase: :func:`_with_theta2`) → :func:`_fused_candidates` →
+    :func:`exact_score` → :func:`topk`.  With two_phase the block scan is
+    persisted (phase 1 and the fused tail both read it) and registered in
+    ``cache_registry``.
     """
     if not isinstance(queries, DataFrame):
         # normalize duplicate term ids ONCE, deterministically, before path
@@ -988,12 +1054,8 @@ def batch_search(
         )
         if res is not None:
             return res
-        # Block-table row cap hit — fall through to the in-plan derivation.
-        # Retire the fast path's abandoned persisted ubs NOW: the in-plan
-        # tail only retires when broadcast_queries/two_phase is set, so a
-        # caller pinning both off would otherwise leak the cache until a
-        # later fast-path call happened to retire it.
-        retire_caches(cache_registry)
+        # Block-table row cap hit — fall through to the in-plan derivation,
+        # which retires the fast path's abandoned persisted ubs.
     qdf = qdf.filter(F.size("q_terms") > 0)
     if small:
         # Dict batches routed in-plan still know their term union on the
@@ -1011,119 +1073,12 @@ def batch_search(
     qvec_j = F.broadcast(qdf) if broadcast_queries else qdf
     matched = matched.join(qvec_j, "query_id")
     ubs = _block_ubs(matched)
-    if not two_phase:
-        # Fused tail (r6): θ + skip filter + decode + dedup in one streamed
-        # operator over query-co-located block rows — one exchange instead
-        # of the wt/wq windows + distinct (guide §2.4), no persist needed
-        # (single consumer), gap blobs cross exactly one shuffle.  Result
-        # bitwise-identical (see _fused_candidates).
-        if cache_registry is not None:
-            retire_caches(cache_registry)
-        cands = _fused_candidates(ubs, k, heap_factor)
-        scored = exact_score(
-            cands, forward, qdf, broadcast_queries=broadcast_queries
-        )
-        return topk(scored, k)
-    if broadcast_queries or two_phase:
-        # small query batches: cache the block scan — θ is an aggregate of
-        # ubs, and without the cache Catalyst executes the whole
-        # postings-join→block-scan subtree once per consumer
-        if cache_registry is not None:
-            retire_caches(cache_registry)
-        ubs = ubs.persist()
-        if cache_registry is not None:
-            cache_registry.append(ubs)
-
-    survivors = _theta_survivors(
-        ubs, forward, qdf, k, heap_factor, two_phase, broadcast_queries
-    )
-    cands = _decode_docs(survivors)
+    retire_caches(cache_registry)
+    if two_phase:
+        ubs = _with_theta2(ubs, forward, qdf, k, broadcast_queries, cache_registry)
+    cands = _fused_candidates(ubs, k, heap_factor)
     scored = exact_score(cands, forward, qdf, broadcast_queries=broadcast_queries)
     return topk(scored, k)
-
-
-def _theta_survivors(
-    ubs: DataFrame,
-    forward: DataFrame,
-    qdf: DataFrame,
-    k: int,
-    heap_factor: float,
-    two_phase: bool,
-    broadcast_queries: bool,
-) -> DataFrame:
-    """θ derivation + skip filter over the ubs frame.
-
-    θ_q (phase 0) = max over matched terms of the k-th largest per-term
-    block-max lower bound.  Two physical strategies, same value:
-
-    - broadcast (small) query batches: ubs is persisted by the caller, θ is
-      a narrow aggregate of the cache joined back as a per-query broadcast —
-      no shuffle of the gap blobs.
-    - DataFrame-scale query sets (κ-NN: the ubs frame is too big to cache):
-      WINDOW functions over the ubs frame itself (rank within (query, term),
-      then a per-query max of the rank-k values) — one pass, no self-join,
-      so the postings-join→block-scan subtree is never executed twice.
-
-    two_phase adds the first_sorted-style tightening: exact-score the
-    best-ub block per matched list; the per-query k-th best exact score is
-    broadcast back and maxed into θ.
-    """
-    wt = Window.partitionBy("query_id", "term_id").orderBy(F.col("lb").desc())
-    if broadcast_queries:
-        theta0 = (
-            ubs.select("query_id", "term_id", "lb")
-            .withColumn("_r", F.row_number().over(wt))
-            .filter(F.col("_r") == k)
-            .groupBy("query_id")
-            .agg(F.max("lb").alias("theta"))
-        )
-        ubs = ubs.join(F.broadcast(theta0), "query_id", "left")
-    else:
-        wq = Window.partitionBy("query_id")
-        ubs = ubs.withColumn("_r", F.row_number().over(wt)).withColumn(
-            "theta",
-            F.max(F.when(F.col("_r") == k, F.col("lb"))).over(wq),
-        )
-
-    if two_phase:
-        wb = Window.partitionBy("query_id", "term_id").orderBy(
-            F.col("ub").desc(), F.col("salt").asc(), F.col("block").asc()
-        )
-        best = (
-            ubs.select("query_id", "term_id", "salt", "block", "ub", "gaps")
-            .withColumn("_rb", F.row_number().over(wb))
-            .filter(F.col("_rb") == 1)
-        )
-        p1 = exact_score(
-            _decode_docs(best), forward, qdf, broadcast_queries=broadcast_queries
-        )
-        wqs = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        theta2 = (
-            p1.withColumn("_r", F.row_number().over(wqs))
-            .filter(F.col("_r") == k)
-            .groupBy("query_id")
-            .agg(F.max("score").alias("theta2"))
-        )
-        # θ2 is one row per query — always broadcast (stats are unknown to
-        # AQE because it hangs off a Python UDF output)
-        ubs = ubs.join(F.broadcast(theta2), "query_id", "left").withColumn(
-            "theta",
-            F.greatest(
-                F.coalesce("theta", F.lit(float("-inf"))),
-                F.coalesce("theta2", F.lit(float("-inf"))),
-            ),
-        ).withColumn(
-            "theta",
-            F.when(F.col("theta") == float("-inf"), F.lit(None)).otherwise(
-                F.col("theta")
-            ),
-        )
-
-    return ubs.filter(
-        F.col("theta").isNull() | (F.col("ub") >= F.lit(heap_factor) * F.col("theta"))
-    )
 
 
 def search_stats(
@@ -1139,8 +1094,10 @@ def search_stats(
     """Skip-rate instrumentation for a query batch: how many matched blocks
     the dynamic pruning skipped, and how many candidate docs survived.
 
-    Mirrors batch_search's candidate selection exactly (same θ derivation);
-    used by the accuracy/efficiency harness — the analogue of the
+    Counted by the in-plan operator itself (:func:`_fused_keep` over each
+    query's block rows, with two_phase's :func:`_with_theta2` column), so
+    the counts are those of the θ and skip decision every search path
+    makes; used by the accuracy/efficiency harness — the analogue of the
     reference's per-run reporting (scripts/run_experiments.py:287-309).
     """
     qdf, _ = _as_queries_df(spark, queries)
@@ -1149,21 +1106,31 @@ def search_stats(
     matched = postings.join(F.broadcast(cterms), "term_id").join(
         F.broadcast(qdf), "query_id"
     )
-    ubs = _block_ubs(matched).persist()
-    survivors = _theta_survivors(
-        ubs, forward, qdf, k, heap_factor, two_phase, broadcast_queries=True
-    ).persist()
-    matched_n = ubs.count()
-    scanned = survivors.count()
-    n_cands = _decode_docs(survivors).count()
-    survivors.unpersist()
-    ubs.unpersist()
+    ubs = _block_ubs(matched)
+    cache: list[DataFrame] = []
+    if two_phase:
+        ubs = _with_theta2(ubs, forward, qdf, k, True, cache)
+
+    def count(pdf: pd.DataFrame) -> pd.DataFrame:
+        kept = _fused_keep(pdf, k, heap_factor)
+        n_cands = _decode_rows(pdf.iloc[kept])[2].size if kept.size else 0
+        return pd.DataFrame(
+            {"matched": [len(pdf)], "scanned": [kept.size], "cands": [n_cands]}
+        )
+
+    sums = (
+        _per_query(_fused_input(ubs), count, "matched LONG, scanned LONG, cands LONG")
+        .agg(*(F.sum(c).alias(c) for c in ("matched", "scanned", "cands")))
+        .collect()[0]
+    )
+    retire_caches(cache)
+    matched_n, scanned, n_cands = (int(v or 0) for v in sums)
     return {
         "blocks_matched": matched_n,
         "blocks_scanned": scanned,
         "blocks_skipped": matched_n - scanned,
         "skip_rate": round(1.0 - scanned / matched_n, 4) if matched_n else 0.0,
-        "candidates": int(n_cands),
+        "candidates": n_cands,
     }
 
 

@@ -49,7 +49,7 @@ __all__ = ["ServingReplica", "TermPostings"]
 @dataclass
 class TermPostings:
     """One term's posting blocks, flattened across salts in (salt asc,
-    block asc) order — the same total order the engine's windows use."""
+    block asc) order — the order of kernel.best_blocks' tie-break."""
 
     salts: np.ndarray  # int32[nb]
     blocks: np.ndarray  # int32[nb]

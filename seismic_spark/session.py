@@ -6,9 +6,12 @@ that matter at cluster scale too (AQE, skew-join handling, Arrow batching).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -90,7 +93,8 @@ def _warm_session(spark: SparkSession) -> None:
     windows, posting assembly, search join/top-k) at negligible data cost,
     moving the one-time warmup out of the first real operator (guide §4.5
     init-once, applied to the JIT; same rationale as the preloaded worker
-    daemon).  Touches no user data and persists nothing.
+    daemon).  Touches no user data; the throwaway index's cached frames
+    are released before returning.
     SEISMIC_WARM_SESSION=0 disables; reused sessions skip via the flag.
     """
     if os.environ.get("SEISMIC_WARM_SESSION", "1") != "1":
@@ -108,11 +112,15 @@ def _warm_session(spark: SparkSession) -> None:
         idx = SeismicSparkIndex.build(
             spark, docs, IndexConfig(n_postings=8, summary_energy=0.8)
         )
-        idx.postings.count()
-        idx.batch_search([("w", ["w1"], [1.0])], k=3).count()
-        spark._seismic_warmed = True
+        try:
+            idx.postings.count()
+            idx.batch_search([("w", ["w1"], [1.0])], k=3).count()
+            spark._seismic_warmed = True
+        finally:
+            for df in (idx.vocab, idx.forward, idx.postings):
+                df.unpersist()
     except Exception:  # warmup must never break session creation
-        pass
+        log.warning("session warmup failed; the first build pays it", exc_info=True)
 
 
 def ensure_min_parallelism(df, key: str | None = None):

@@ -75,3 +75,38 @@ def test_decode_dedup_matches_set_reference():
         want |= {(q, int(d)) for d in ids}
     qs, ds = kernel.decode_dedup(np.asarray(q_of, dtype=np.int64), blobs)
     assert list(zip(qs.tolist(), ds.tolist())) == sorted(want)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_best_blocks_and_keep_mask(seed):
+    """best_blocks == a per-list min over (-ub, salt, block) in any input
+    order (ub ties on a coarse grid); keep_mask == keep_blocks at
+    max(theta0, theta2), with NaN and -inf theta2 meaning "no phase-1 θ"."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(1, 200))
+    q_of = rng.integers(0, 4, n)
+    term = rng.integers(0, 5, n)
+    ub = rng.integers(0, 4, n) / 2.0
+    lb = ub / 2.0
+    salt = rng.integers(0, 3, n)
+    block = rng.permutation(n)  # unique within a list, as stored
+    got = kernel.best_blocks(q_of, term, ub, salt, block)
+    want = {}
+    for i in range(n):
+        key, rank = (q_of[i], term[i]), (-ub[i], salt[i], block[i])
+        if key not in want or rank < want[key][0]:
+            want[key] = (rank, i)
+    assert sorted(got.tolist()) == sorted(i for _, i in want.values())
+    assert [(q_of[i], term[i]) for i in got] == sorted(want)
+
+    theta2 = np.array([np.nan, -np.inf, 0.75, 5.0])
+    for k, hf in ((1, 1.0), (2, 0.8), (50, 1.0)):
+        theta = np.fmax(kernel.theta0(q_of, term, lb, k, 4), theta2)
+        assert np.array_equal(
+            kernel.keep_mask(q_of, term, lb, ub, k, 4, hf, theta2),
+            kernel.keep_blocks(ub, theta[q_of], hf),
+        )
+        assert np.array_equal(
+            kernel.keep_mask(q_of, term, lb, ub, k, 4, hf),
+            kernel.keep_blocks(ub, kernel.theta0(q_of, term, lb, k, 4)[q_of], hf),
+        )

@@ -19,9 +19,6 @@ ALLOWED = {
     # process-wide side effects (session warmup, allocator policy)
     "SEISMIC_WARM_SESSION",
     "SEISMIC_MALLOC_TUNE",
-    "SEISMIC_MALLOC_MMAP_THRESHOLD",
-    "SEISMIC_MALLOC_TRIM_THRESHOLD",
-    "SEISMIC_JEMALLOC_DECAY_MS",
 }
 
 _PKG = pathlib.Path(__file__).resolve().parent.parent / "seismic_spark"

@@ -1,8 +1,6 @@
 """Round-6 optimization closures — each restructure pinned against the
 formulation it replaced (results must be identical, not just close):
 
-- fused θ/decode/dedup tail (search._fused_candidates) vs the windowed
-  _theta_survivors → _decode_docs → distinct chain;
 - the κ-NN replica map vs the in-plan fallback, and the replica broadcast's
   release;
 - narrow per-row cut_terms vs the explode → groupBy → window formulation;
@@ -35,36 +33,6 @@ def idx(spark):
         spark, corpus,
         IndexConfig(n_postings=50, summary_energy=0.8, blocking="geometric"),
     )
-
-
-def _rows(df):
-    return sorted((r.query_id, r.rank, r.doc_id, r.score) for r in df.collect())
-
-
-def test_fused_tail_matches_windowed_tail(spark, idx):
-    """DataFrame-path batch_search (fused tail) == the r5 windowed chain,
-    exact floats, on a self-search batch with hf < 1 (knife-edge skips)."""
-    qdf = idx.forward.select(
-        F.col("doc_id").cast("string").alias("query_id"),
-        F.col("terms").alias("q_terms"),
-        F.col("weights").alias("q_weights"),
-    ).filter(F.size("q_terms") > 0).limit(80)
-    k, qc, hf = 5, 6, 0.7
-    fused = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf,
-        k=k, query_cut=qc, heap_factor=hf, broadcast_queries=False,
-    )
-    cterms = srch.cut_terms(qdf, qc)
-    matched = idx.postings.join(cterms, "term_id").join(qdf, "query_id")
-    ubs = srch._block_ubs(matched)
-    survivors = srch._theta_survivors(
-        ubs, idx.forward, qdf, k, hf, False, False
-    )
-    cands = srch._decode_docs(survivors)
-    scored = srch.exact_score(cands, idx.forward, qdf, broadcast_queries=False)
-    windowed = srch.topk(scored, k)
-    assert _rows(fused) == _rows(windowed)
-    assert fused.count() > 0
 
 
 def test_cut_terms_matches_windowed_formulation(spark, idx):
